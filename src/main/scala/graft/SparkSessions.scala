@@ -18,10 +18,7 @@ import org.apache.spark.sql.SparkSession
  *  - AQE + coalesce + skew-join + 128 MB scan partitions: Spark 4 defaults,
  *    pinned here so a deployment-side conf file can't silently regress them
  *    (the reference pins the same AQE flags, spark/app.py:20–22).
- *  - RocksDB state store (streaming): dedup keys, open windows, sessions
- *    and join buffers spill off-heap to local disk instead of living on the
- *    JVM heap. NOTE: the provider is recorded in the checkpoint and cannot
- *    change across restarts — it only takes effect for NEW checkpoints.
+ *  - streaming: the three settings of [[Streaming]], rationale there.
  *  - UTC session timezone: zone-independent, oracle-comparable timestamps.
  *  - runtime bloom-filter injection OFF: the rule sizes the application
  *    side from plan statistics, and this engine's shared snapshot
@@ -38,6 +35,36 @@ import org.apache.spark.sql.SparkSession
  *    inferred reductions over well-statted scans.
  */
 object SparkSessions {
+
+  /** What `recommended(streaming = true)` adds, in one value so the specs
+    * run the state and listing config the deployed path runs:
+    *  - RocksDB state store: dedup keys, open windows, sessions and join
+    *    buffers spill off-heap to local disk instead of living on the JVM
+    *    heap. The provider is recorded in the checkpoint and cannot change
+    *    across restarts — it only takes effect for NEW checkpoints.
+    *  - changelog checkpointing: each state-store commit writes the batch's
+    *    changes (`N.changelog`) instead of a full snapshot (`N.zip`) per
+    *    partition per stateful operator; snapshots move to background
+    *    maintenance. A small micro-batch's commit then costs what it
+    *    changed, not what the store holds: a third to a half less commit
+    *    time on the trickle path (CHANGES.md cites the traced record). It
+    *    can be turned on over an existing RocksDB checkpoint written
+    *    without it: recovery loads the last snapshot and replays changelogs
+    *    on top (DeployedStreamConfSpec restarts a snapshot-only one).
+    *  - parallel listing threshold: the file source hands each batch's new
+    *    files to an index that, above this many paths, lists them in a
+    *    Spark job with one task per file — a whole extra job per
+    *    micro-batch for what is a driver-side stat per file, cheap on local
+    *    disk and HDFS (one NameNode RPC). Raised well above any per-batch
+    *    file count so the driver stats them itself. Caveat: on an object
+    *    store (S3, GCS) each stat is a remote round trip, so a batch of
+    *    many thousand files lists faster in parallel — cap the batch with
+    *    `maxFilesPerTrigger` there, or lower this threshold. */
+  val Streaming: Map[String, String] = Map(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+    "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "10000")
 
   private val LocalMaster = "local\\[(\\d+)(?:,\\d+)?\\]".r
   private val LocalStar = "local(?:\\[\\*(?:,\\d+)?\\])?".r
@@ -72,12 +99,7 @@ object SparkSessions {
     val withMaster =
       if (sys.props.contains("spark.master") && sys.env.get("SPARK_MASTER").isEmpty) b
       else b.master(master)
-    val withState =
-      if (streaming)
-        withMaster.config("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      else withMaster
-    val spark = withState.getOrCreate()
+    val spark = (if (streaming) withMaster.config(Streaming) else withMaster).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -480,7 +480,11 @@ object StreamBench extends Serializable {
       // matches the bench's record order (flagship first); each probe
       // keeps its own untimed warm pass, and the bench re-pins both
       // bands on the folded fork (BASELINE.md round 17). Bench defaults
-      // only — env overrides would be ambiguous across the two probes.
+      // only — env overrides would be ambiguous across the two probes,
+      // so a set one is named as ignored rather than dropped silently.
+      val ignored = Seq("SPARK_GRAFT_STREAM_EVENTS", "SPARK_GRAFT_STREAM_BATCHES").filter(sys.env.contains)
+      if (ignored.nonEmpty)
+        System.err.println(s"StreamBench pair: ignoring ${ignored.mkString(", ")}; pair mode runs the bench defaults")
       probe(spark, 60000L, 3)
       val r = probe(spark)
       println(s"""{"metric":"stream_rows_per_sec","value":${r.rowsPerSec.round},"unit":"rows/sec","detail":${r.json}}""")

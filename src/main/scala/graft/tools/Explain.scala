@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Print the formatted physical plan of a registered query (dev tool):
   *   runMain graft.tools.Explain <queryName> [sfDir]
@@ -445,9 +446,13 @@ object Explain {
         // the FINAL adaptive plan (isFinalPlan=true) — the only place AQE
         // stage reuse (ReusedQueryStage/AQEShuffleRead) of repeated
         // subtrees is visible; the static plan shows duplicates that
-        // never execute twice. collect() runs through df's own
-        // queryExecution, so the explain below reflects the executed run.
-        if (args.headOption.contains("--dumpexec")) df.collect()
+        // never execute twice. The run goes through df's own
+        // queryExecution, so the explain below reflects it, and its rows
+        // are dropped on the executors: nothing is buffered in the driver.
+        if (args.headOption.contains("--dumpexec")) {
+          val qe = df.queryExecution
+          SQLExecution.withNewExecutionId(qe, Some("dumpexec"))(qe.toRdd.foreach(_ => ()))
+        }
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.write(

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.SparkSpec
+import graft.{SparkSessions, SparkSpec}
 
 /** transformWithState first-seen dedup: within-batch and cross-run
   * duplicate drops, with RocksDB-backed state surviving a query restart
@@ -22,20 +22,8 @@ import graft.SparkSpec
 class TwsDedupSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withRocksDb[A](f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("first occurrence survives; dups drop within batch AND across restarts") {
-    withRocksDb {
+    withConf(SparkSessions.Streaming) {
       val in = Files.createTempDirectory("tws_in").toString
       val out = Files.createTempDirectory("tws_out").toString
       val chk = Files.createTempDirectory("tws_chk").toString
