@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.util.{NioLocalFileSystem, NioLocalFs}
+
 /**
  * Recommended session configuration for this engine — the knobs that matter
  * at 100 TB, applied consistently by the CLI entry points (StreamRunner,
@@ -19,6 +21,7 @@ import org.apache.spark.sql.SparkSession
  *    pinned here so a deployment-side conf file can't silently regress them
  *    (the reference pins the same AQE flags, spark/app.py:20–22).
  *  - streaming: the three settings of [[Streaming]], rationale there.
+ *  - `file:` filesystem: the two classes of [[LocalFiles]], rationale there.
  *  - UTC session timezone: zone-independent, oracle-comparable timestamps.
  *  - runtime bloom-filter injection OFF: the rule sizes the application
  *    side from plan statistics, and this engine's shared snapshot
@@ -66,6 +69,37 @@ object SparkSessions {
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
     "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "10000")
 
+  /** The `file:` filesystem every session here builds, for both Hadoop
+    * entry points: `fs.file.impl` for the `FileSystem` API (parquet sink
+    * part files, DailyBatch output) and `fs.AbstractFileSystem.file.impl`
+    * for the `FileContext` API (offset, commit and source logs, state-store
+    * changelogs and snapshots, the sink's metadata log).
+    *
+    * Why: without the native Hadoop library (the `NativeCodeLoader` warning
+    * at start-up), Hadoop's local filesystem starts a shell `chmod` for every
+    * file and directory it creates, `.crc` files included, and a shell
+    * `readlink` on both sides of every `FileContext` rename. One state-store
+    * changelog commit is two atomic files, each with a `.crc`: 12 process
+    * starts, about 100 ms per task with almost no CPU, on every micro-batch
+    * and stateful partition. [[graft.util.NioRawLocalFileSystem]] makes the
+    * same two calls through `java.nio`.
+    *
+    * Unchanged: the same files land on disk, `.crc` checksums included, with
+    * the same permission bits, and renames keep the same sequence, including
+    * the no-overwrite check the offset log relies on. Other schemes (`hdfs:`,
+    * `s3a:`) are not affected. Set at build time, not per query, because
+    * Hadoop caches one `FileSystem` instance per scheme.
+    *
+    * Left unset, `fs.file.impl` resolves through Hadoop's ServiceLoader
+    * registry, where Hive's `ProxyLocalFileSystem` (hive-exec, on Spark's
+    * classpath) registers after `LocalFileSystem` and wins. It is a
+    * `LocalFileSystem` that refuses a `FileSystem` rename onto an existing
+    * file; the sink, checkpoint and DailyBatch writes make no such rename,
+    * so the class here keeps Hadoop's own. */
+  val LocalFiles: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
+
   private val LocalMaster = "local\\[(\\d+)(?:,\\d+)?\\]".r
   private val LocalStar = "local(?:\\[\\*(?:,\\d+)?\\])?".r
 
@@ -95,6 +129,7 @@ object SparkSessions {
       // single-query execution is unaffected (FAIR ≡ FIFO for one job)
       .config("spark.scheduler.mode", "FAIR")
       .config("spark.ui.enabled", "false")
+      .config(LocalFiles)
     // only set the master when spark-submit didn't already provide one
     val withMaster =
       if (sys.props.contains("spark.master") && sys.env.get("SPARK_MASTER").isEmpty) b

@@ -39,6 +39,8 @@ object SparkSpec {
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$wh/metastore_db;create=true")
       .config("spark.ui.enabled", "false")
+      // the deployed `file:` filesystem (graft.SparkSessions.LocalFiles)
+      .config(graft.SparkSessions.LocalFiles)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
