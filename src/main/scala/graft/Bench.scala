@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Fresh-JVM streaming probe (VERDICT r12 #4): fork a plain `java`
@@ -98,23 +97,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // runtime bloom injection OFF — misinformed on stats-less snapshot
-      // LogicalRDDs; rationale in graft.SparkSessions
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      // FAIR job scheduling: only the concurrent snapshot_build section
-      // runs jobs in parallel, and under FIFO its many-small-job tasks
-      // (the bpe merge loop) queue behind other artifacts' 32-task
-      // stages — measured 14.6 s -> 11.0 s for the section at sf0.1.
-      // Queries run one at a time, where FAIR ≡ FIFO.
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.session.timeZone", "UTC")   // same workload shape as Verify on any host
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkSessions.recommended("graft-bench")
     // r14 (VERDICT r13 #2): the STANDALONE stream probe runs FIRST —
     // before the 205-query batch suite has touched a byte — so its fresh
     // child JVMs measure the streaming plan on the same clean host the

@@ -5,15 +5,18 @@ import org.apache.spark.sql.SparkSession
 import graft.util.{NioLocalFileSystem, NioLocalFs}
 
 /**
- * Recommended session configuration for this engine — the knobs that matter
- * at 100 TB, applied consistently by the CLI entry points (StreamRunner,
- * DailyBatch). The driver-owned mains (Verify/Bench) keep their own minimal
- * builders per the driver contract.
+ * The one session recipe of this engine. Every entry point (Verify, Bench,
+ * StreamRunner, DailyBatch, CurateRunner, StreamBench, Explain, Profile)
+ * builds its session through [[recommended]], so they all plan and compute
+ * under the same [[Engine]] settings; the test session (`SparkSpec`) layers
+ * its fixed master and warehouse over the same [[Engine]] map.
  *
  * Rationale per knob:
- *  - master: spark-submit's `--master` wins (code-set master would override
- *    it); `SPARK_MASTER` env overrides for ad-hoc runs; `local[4]` only as
- *    the last-resort default for bare `sbt runMain`.
+ *  - master ([[settings]]): `SPARK_MASTER` env wins for ad-hoc runs; else
+ *    spark-submit's `--master` (the `spark.master` system property) is left
+ *    alone, since a code-set master would override it; else
+ *    `local[$SPARK_GRAFT_CPUS]`; `local[4]` only as the last-resort default
+ *    for bare `sbt runMain`.
  *  - shuffle partitions: `SPARK_GRAFT_CPUS` if set, else the local master's
  *    thread count — on a cluster, set it to 2–3× total executor cores and
  *    let AQE coalesce the excess.
@@ -23,6 +26,12 @@ import graft.util.{NioLocalFileSystem, NioLocalFs}
  *  - streaming: the three settings of [[Streaming]], rationale there.
  *  - `file:` filesystem: the two classes of [[LocalFiles]], rationale there.
  *  - UTC session timezone: zone-independent, oracle-comparable timestamps.
+ *  - `nanosAsLong`: corpus events.parquet may be TIMESTAMP_NS; set at build
+ *    time, never as a loader side effect (see Tables.events).
+ *  - FAIR job scheduling for the concurrent-job phase (SnapshotBuild): under
+ *    FIFO its many small jobs queue behind other artifacts' wide stages
+ *    (measured 14.6 s → 11.0 s for the section at sf0.1). Single-query
+ *    execution is unaffected (FAIR ≡ FIFO for one job).
  *  - runtime bloom-filter injection OFF: the rule sizes the application
  *    side from plan statistics, and this engine's shared snapshot
  *    artifacts (checkpointed LogicalRDDs — SnapshotCache) carry NO stats,
@@ -100,41 +109,48 @@ object SparkSessions {
     "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
 
+  /** Every setting that results or plans depend on, the same for every
+    * entry point and for the test session (rationale per knob above). */
+  val Engine: Map[String, String] = Map(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.files.maxPartitionBytes" -> (128L * 1024 * 1024).toString,
+    "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false",
+    "spark.scheduler.mode" -> "FAIR",
+    "spark.ui.enabled" -> "false") ++ LocalFiles
+
   private val LocalMaster = "local\\[(\\d+)(?:,\\d+)?\\]".r
   private val LocalStar = "local(?:\\[\\*(?:,\\d+)?\\])?".r
 
-  def recommended(appName: String, streaming: Boolean = false): SparkSession = {
-    val master = sys.env.get("SPARK_MASTER")
-      .orElse(sys.props.get("spark.master"))
+  /** The conf [[recommended]] builds from an environment and the JVM's
+    * system properties: [[Engine]], the master and shuffle partitions they
+    * resolve to, and [[Streaming]] when `streaming`. The map carries no
+    * `spark.master` when spark-submit's is to be left alone. */
+  def settings(streaming: Boolean, env: Map[String, String],
+               props: Map[String, String]): Map[String, String] = {
+    val master = env.get("SPARK_MASTER")
+      .orElse(props.get("spark.master"))
+      .orElse(env.get("SPARK_GRAFT_CPUS").map(n => s"local[$n]"))
       .getOrElse("local[4]")
     val defaultParts = master match {
       case LocalMaster(n) => n
       case LocalStar()    => Runtime.getRuntime.availableProcessors().toString
       case _              => "200"   // cluster: expect SPARK_GRAFT_CPUS or AQE
     }
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultParts)
-    val b = SparkSession.builder()
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // corpus events.parquet is TIMESTAMP_NS; set at build time (never as
-      // a loader side effect — see Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      // FAIR job scheduling for concurrent-job phases (SnapshotBuild);
-      // single-query execution is unaffected (FAIR ≡ FIFO for one job)
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .config(LocalFiles)
-    // only set the master when spark-submit didn't already provide one
-    val withMaster =
-      if (sys.props.contains("spark.master") && sys.env.get("SPARK_MASTER").isEmpty) b
-      else b.master(master)
-    val spark = (if (streaming) withMaster.config(Streaming) else withMaster).getOrCreate()
+    val leaveMaster = props.contains("spark.master") && !env.contains("SPARK_MASTER")
+    Engine ++
+      (if (leaveMaster) Map.empty else Map("spark.master" -> master)) ++
+      Map("spark.sql.shuffle.partitions" -> env.getOrElse("SPARK_GRAFT_CPUS", defaultParts)) ++
+      (if (streaming) Streaming else Map.empty)
+  }
+
+  def recommended(appName: String, streaming: Boolean = false): SparkSession = {
+    val spark = SparkSession.builder().appName(appName)
+      .config(settings(streaming, sys.env, sys.props.toMap))
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

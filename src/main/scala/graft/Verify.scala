@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,18 +9,7 @@ object Verify {
     // regex — only matching query names are dumped and oracled
     val nameFilter: String => Boolean =
       args.lift(2).map(p => (s: String) => s.matches(p)).getOrElse(_ => true)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // runtime bloom injection OFF — misinformed on stats-less snapshot
-      // LogicalRDDs; rationale in graft.SparkSessions
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkSessions.recommended("graft-verify")
     new java.io.File(outDir).mkdirs()
     // only emit oracle SQL for queries whose parquet actually landed — an
     // oracle entry pointing at a missing result dir would break the

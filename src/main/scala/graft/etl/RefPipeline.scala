@@ -43,8 +43,18 @@ object RefPipeline {
   def normalizeDevice(c: Column): Column =
     coalesce(lower(trim(c)), lit("unknown"))
 
-  /** P4–P8 + D1 (reference app.py:66–79): normalize device, uppercase
-    * country, parse timestamp, fill nulls, drop duplicate event_ids.
+  /** P4–P8 (reference app.py:66–75): normalize device, uppercase country,
+    * parse timestamp, fill nulls. The row-local half of cleaning, shared by
+    * the batch [[clean]] and [[graft.stream.StreamPipeline.cleanStream]]. */
+  def scalarClean(parsed: DataFrame): DataFrame =
+    parsed
+      .withColumn("device_norm", normalizeDevice(col("device")))
+      .withColumn("country", upper(col("country")))
+      .withColumn("event_time", to_timestamp(col("event_time")))
+      .na.fill(Map("amount" -> 0.0, "country" -> "UNKNOWN", "device_norm" -> "unknown"))
+
+  /** P4–P8 + D1 (reference app.py:66–79): [[scalarClean]], then drop
+    * duplicate event_ids.
     *
     * Dedup semantics: the reference calls dropDuplicates BEFORE any
     * watermark (app.py:77–79), so its state is unbounded (SURVEY §2.6 ⚠).
@@ -53,12 +63,7 @@ object RefPipeline {
     * dropDuplicatesWithinWatermark — an intentional, documented deviation.
     */
   def clean(parsed: DataFrame): DataFrame =
-    parsed
-      .withColumn("device_norm", normalizeDevice(col("device")))
-      .withColumn("country", upper(col("country")))
-      .withColumn("event_time", to_timestamp(col("event_time")))
-      .na.fill(Map("amount" -> 0.0, "country" -> "UNKNOWN", "device_norm" -> "unknown"))
-      .dropDuplicates("event_id")
+    scalarClean(parsed).dropDuplicates("event_id")
 
   /** Our dimension fixtures (reference app.py:87–125 shape; our values). */
   def usersDim(spark: SparkSession): DataFrame = {

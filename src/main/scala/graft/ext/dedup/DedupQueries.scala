@@ -953,8 +953,7 @@ object DedupQueries {
     * Deterministic: min-propagation (with or without jumping) converges
     * to the unique per-component-min fixpoint regardless of partitioning
     * or join order. */
-  private[graft] def components(pairs: DataFrame, a: String, b: String,
-                                onRound: (Int, Long, Double) => Unit = (_, _, _) => ()): DataFrame = {
+  private[graft] def components(pairs: DataFrame, a: String, b: String): DataFrame = {
     // both edge directions from ONE explode over the pair rows — the
     // union-of-self form evaluated the whole pair query once per arm
     val edges = pairs.select(col(a), col(b))
@@ -970,10 +969,7 @@ object DedupQueries {
       .select(col("id"), least(col("id"), col("nm")).as("label"))
       .localCheckpoint()
     var changed = 1L
-    var round = 0
     while (changed > 0) {
-      round += 1
-      val t0 = System.nanoTime()
       val neighborMin = edges
         .join(labels.select(col("id").as("v"), col("label").as("vl")), "v")
         .groupBy(col("u").as("id")).agg(min(col("vl")).as("nl"))
@@ -1013,9 +1009,6 @@ object DedupQueries {
       releaseSnapshot(stepped)
       releaseSnapshot(labels)
       labels = next.select(col("id"), col("label"))
-      // per-round observability hook (rounds × cost decomposition for the
-      // SCALING.md probes) — a no-op by default
-      onRound(round, changed, (System.nanoTime() - t0) / 1e9)
     }
     // the returned frame reads only the final round's checkpoint — the
     // edge list's blocks are dead weight from here

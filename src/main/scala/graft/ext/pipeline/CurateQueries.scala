@@ -615,15 +615,9 @@ object CurateQueries {
     * other common scheme) need no mining at all — this operator exists
     * for the curriculum that wants CORPUS-wide negatives pinned ahead of
     * batching. */
-  def qTrainTriplets(spark: SparkSession, dir: String): DataFrame =
-    tripletsFrom(
-      DedupQueries.jaccardPairSnapshot(spark, dir).select(col("doc_a"), col("doc_b")),
-      Tables.documents(spark, dir).select(col("doc_id")))
-
-  /** The mining kernel over a (doc_a, doc_b) pair frame and a doc_id
-    * list — separable so the scale probe can grow the pair graph without
-    * re-paying the snapshot build it does not measure. */
-  private[graft] def tripletsFrom(pairs: DataFrame, docs: DataFrame): DataFrame = {
+  def qTrainTriplets(spark: SparkSession, dir: String): DataFrame = {
+    val pairs = DedupQueries.jaccardPairSnapshot(spark, dir).select(col("doc_a"), col("doc_b"))
+    val docs = Tables.documents(spark, dir).select(col("doc_id"))
     val nb = docs.agg(
       greatest(lit(1L), expr(s"count(1) DIV $NegOccupancy")).as("nb_total"))
     val cands = docs.crossJoin(broadcast(nb)).select(

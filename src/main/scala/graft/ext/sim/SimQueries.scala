@@ -159,10 +159,10 @@ object SimQueries {
 
   /** Deterministic ±1 hyperplane components from the shared md5 primitive
     * (seeded on "rh|plane|dim"), collected into one array per plane so the
-    * per-vector signature is nPlanes codegen'd integer dot products
+    * per-vector signature is [[NPlanes]] codegen'd integer dot products
     * ([[graft.functions.ArrayDotLong]]), not a dims×planes row blow-up. */
-  private def planes(spark: SparkSession, nPlanes: Int): DataFrame =
-    spark.range(nPlanes).toDF("p")
+  private def planes(spark: SparkSession): DataFrame =
+    spark.range(NPlanes).toDF("p")
       // explicit broadcast: a 64-row literal range, but without the hint
       // the planner's choice rests on size estimates (CrossJoinDisciplineSpec)
       .crossJoin(broadcast(spark.range(1, Dim + 1).toDF("d")))
@@ -175,37 +175,24 @@ object SimQueries {
         t => t.getField("sgn")).as("pv"))
 
   /** (vec_id, band, band-hash): sign bit of each hyperplane dot product,
-    * packed `planesPerBand` bits per band. Cosine-similar vectors agree
+    * packed [[PlanesPerBand]] bits per band. Cosine-similar vectors agree
     * on most sign bits, so they collide in ≥1 band with high
     * probability. ONE canonical construction (seed string, plane hash,
-    * bit packing), parameterized so the registered paths, the dedup-side
-    * band config, and Profile's band-width sweep all share it — a sweep
-    * that re-derived planes itself would silently diverge from the
-    * numbers it claims to measure. */
-  /** The banded signature index — at the DEFAULT band config a snapshot
-    * artifact (`lsh_bands`, the signature-index discipline: per-vector
-    * band hashes are exactly what a production LSH deployment persists
-    * and bucket-joins); the parameterized variants (the band-width probe)
-    * stay live builds. */
-  private[graft] def lshBands(spark: SparkSession, dir: String,
-                              nPlanes: Int = NPlanes,
-                              planesPerBand: Int = PlanesPerBand): DataFrame =
-    if (nPlanes == NPlanes && planesPerBand == PlanesPerBand)
-      graft.util.SnapshotCache.snapshot("lsh_bands", spark, dir)(
-        lshBandsLive(spark, dir, nPlanes, planesPerBand))
-    else lshBandsLive(spark, dir, nPlanes, planesPerBand)
+    * bit packing) shared by the registered paths and the dedup-side band
+    * config. A snapshot artifact (`lsh_bands`, the signature-index
+    * discipline: per-vector band hashes are exactly what a production LSH
+    * deployment persists and bucket-joins). */
+  private[graft] def lshBands(spark: SparkSession, dir: String): DataFrame =
+    graft.util.SnapshotCache.snapshot("lsh_bands", spark, dir)(
+      quantized(spark, dir).crossJoin(broadcast(planes(spark)))
+        .withColumn("dot", VectorFunctions.arrayDotLong(col("v"), col("pv")))
+        .withColumn("bit", when(col("dot") >= 0, lit(1L)).otherwise(lit(0L)))
+        .groupBy(col("vec_id"), expr(s"CAST(p DIV $PlanesPerBand AS BIGINT)").as("band"))
+        .agg(sum(expr(s"shiftleft(bit, CAST(p % $PlanesPerBand AS INT))")).as("bh")))
 
   /** Build-hook for [[graft.util.SnapshotBuild]]. */
   private[graft] def lshBandIndex(spark: SparkSession, dir: String): DataFrame =
     lshBands(spark, dir)
-
-  private def lshBandsLive(spark: SparkSession, dir: String,
-                           nPlanes: Int, planesPerBand: Int): DataFrame =
-    quantized(spark, dir).crossJoin(broadcast(planes(spark, nPlanes)))
-      .withColumn("dot", VectorFunctions.arrayDotLong(col("v"), col("pv")))
-      .withColumn("bit", when(col("dot") >= 0, lit(1L)).otherwise(lit(0L)))
-      .groupBy(col("vec_id"), expr(s"CAST(p DIV $planesPerBand AS BIGINT)").as("band"))
-      .agg(sum(expr(s"shiftleft(bit, CAST(p % $planesPerBand AS INT))")).as("bh"))
 
   /** LSH-bucketed ANN: candidates are corpus vectors sharing any signature
     * band with the query; exact cosine top-K within the candidate set.
@@ -657,28 +644,23 @@ object SimQueries {
     * quantized CTE in scope) — ONE replay of the plane/band definition
     * shared by the knn_lsh oracle and the bucketed semantic-dedup oracle
     * in graft.ext.dedup, so both gates prove the same candidate rule.
-    * Parameterized exactly like [[lshBands]] so a path that widens its
-    * bands carries its oracle with it by construction. */
-  private[graft] def lshBandCtesFor(nPlanes: Int, planesPerBand: Int): String =
+    * Lazy: referenced from DedupQueries' oracle map, which may force this
+    * object mid-initialization — the constants it closes over are
+    * initialized before any cross-object val. */
+  private[graft] lazy val lshBandCtes: String =
     s"""pl AS (
        |  SELECT p, d,
        |    CASE WHEN ${Exact.md5Long28Sql("'rh|' || CAST(p AS VARCHAR) || '|' || CAST(d AS VARCHAR)")} % 2 = 0
        |         THEN 1 ELSE -1 END AS sgn
-       |  FROM generate_series(0, ${nPlanes - 1}) tp(p),
+       |  FROM generate_series(0, ${NPlanes - 1}) tp(p),
        |       generate_series(1, $Dim) td(d)),
        |dots AS (
        |  SELECT q.vec_id, pl.p, CAST(sum(q.v[pl.d] * pl.sgn) AS BIGINT) AS dot
        |  FROM q, pl GROUP BY 1, 2),
        |bands AS (
-       |  SELECT vec_id, p // $planesPerBand AS band,
-       |    CAST(sum((CASE WHEN dot >= 0 THEN 1 ELSE 0 END) << (p % $planesPerBand)) AS BIGINT) AS bh
+       |  SELECT vec_id, p // $PlanesPerBand AS band,
+       |    CAST(sum((CASE WHEN dot >= 0 THEN 1 ELSE 0 END) << (p % $PlanesPerBand)) AS BIGINT) AS bh
        |  FROM dots GROUP BY 1, 2)""".stripMargin
-
-  /** Default-config band CTEs (the ANN path). Lazy: referenced from
-    * DedupQueries' oracle map, which may force this object
-    * mid-initialization — the constants it closes over are initialized
-    * before any cross-object val. */
-  private[graft] lazy val lshBandCtes: String = lshBandCtesFor(NPlanes, PlanesPerBand)
 
   /** The Lloyd assignment CTE: nearest centroid in `prevCent` by the same
     * integer distance score the Spark side computes (argmin of

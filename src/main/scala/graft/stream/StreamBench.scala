@@ -435,17 +435,10 @@ object StreamBench extends Serializable {
     * with arg `join`, the stream-stream attribution-join probe
     * [[probeJoin]]; with arg `mv`, the MV-fold probe [[probeMvFold]]. */
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // runtime bloom injection OFF — misinformed on stats-less snapshot
-      // LogicalRDDs; rationale in graft.SparkSessions
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // streaming = false: the probes measure the default HDFS-backed state
+    // store (the `large` probe sets RocksDB itself), so the band keeps its
+    // meaning
+    val spark = graft.SparkSessions.recommended("graft-stream-bench")
     if (args.headOption.contains("mv")) {
       val n = sys.env.getOrElse("SPARK_GRAFT_STREAM_EVENTS", "1000000").toLong
       val b = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "20").toInt

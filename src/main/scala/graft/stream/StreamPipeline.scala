@@ -97,15 +97,11 @@ object StreamPipeline {
 
   // ---------------------------------------------------------------- stages
 
-  /** Streaming clean: same scalar cleaning as [[RefPipeline.clean]] but the
+  /** Streaming clean: the batch twin's [[RefPipeline.scalarClean]], but the
     * dedup is `dropDuplicatesWithinWatermark` AFTER the watermark, so state
     * for an event_id is dropped once the watermark passes it. */
   def cleanStream(parsed: DataFrame, watermark: String = "30 seconds"): DataFrame =
-    parsed
-      .withColumn("device_norm", RefPipeline.normalizeDevice(col("device")))
-      .withColumn("country", upper(col("country")))
-      .withColumn("event_time", to_timestamp(col("event_time")))
-      .na.fill(Map("amount" -> 0.0, "country" -> "UNKNOWN", "device_norm" -> "unknown"))
+    RefPipeline.scalarClean(parsed)
       .withWatermark("event_time", watermark)
       .dropDuplicatesWithinWatermark("event_id")
 

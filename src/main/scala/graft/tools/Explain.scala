@@ -6,7 +6,10 @@ import org.apache.spark.sql.execution.SQLExecution
 /** Print the formatted physical plan of a registered query (dev tool):
   *   runMain graft.tools.Explain <queryName> [sfDir]
   * or regenerate the checked-in plan dossier (PLANS.md):
-  *   runMain graft.tools.Explain --audit <outFile> [sfDir] */
+  *   runMain graft.tools.Explain --audit <outFile> [sfDir]
+  * The session is [[graft.SparkSessions.recommended]]; PLANS.md's plans are
+  * taken with SPARK_MASTER and SPARK_GRAFT_CPUS unset (local[4], 4 shuffle
+  * partitions), as its header says. */
 object Explain {
 
   /** The representative plans the dossier documents, with the property
@@ -394,14 +397,7 @@ object Explain {
         s"unknown queries: ${unknown.mkString(", ")} — names come from " +
           "SparkEntry.queries/specOnly")
     }
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // runtime bloom injection OFF — misinformed on stats-less snapshot
-      // LogicalRDDs; rationale in graft.SparkSessions
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SparkSessions.recommended("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     if (args.headOption.contains("--audit")) {
       val out = args.lift(1).getOrElse("PLANS.md")

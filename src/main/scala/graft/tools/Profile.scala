@@ -2,15 +2,21 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.ext.text.TextNorm
-import graft.functions.Exact
 import graft.sources.Tables
 
-/** Scratch profiler for stage-level timings (dev tool). */
+/** Dev timing tool over a scale-factor directory, in three modes:
+  *   runMain graft.tools.Profile <sfDir> scalepin [record]
+  *   runMain graft.tools.Profile <sfDir> snapbuild [widths…]
+  *   runMain graft.tools.Profile <sfDir> q <names…>
+  * A missing or unknown mode prints the usage line and exits 2. The session
+  * is [[graft.SparkSessions.recommended]]. */
 object Profile {
 
-  /** The scale14 10× fixture family (shared by the `scale14` probe and
-    * the `scalepin` regression gate): documents ×10 content-salted (near
+  private val Usage =
+    "usage: Profile <sfDir> scalepin [record] | snapbuild [widths...] | q <names...>"
+
+  /** The 10× fixture family of the `scalepin` gate (first built for the
+    * scale14 probe, SCALING.md): documents ×10 content-salted (near
     * -dup structure replicated per copy, no cross-copy dup mass),
     * lineitem ×10 with prices perturbed one cent per copy, events ×10
     * with values salted one cent per copy (distinct-cents domain ×10 —
@@ -40,8 +46,8 @@ object Profile {
     (s"$out/docs", s"$out/li", s"$out/ev")
   }
 
-  /** scale12's rotated-copy embedding ×10 fixture, factored for reuse by
-    * the `scale12` probe and the `scalepin` gate: norm-preserving
+  /** The rotated-copy embedding ×10 fixture (scale12, SCALING.md) for the
+    * `scalepin` gate: norm-preserving
     * decorrelated rotations; copies > 0 remapped OFF the query stride
     * (span % stride = 2 keeps every remapped id odd) so the query set
     * stays fixed while the corpus grows 10× — the corpus-linear axis
@@ -105,1235 +111,145 @@ object Profile {
     "q_mad_outliers" -> "ev", "q_mad_outliers_approx" -> "ev")
 
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // runtime bloom injection OFF — misinformed on stats-less snapshot
-      // LogicalRDDs; rationale in graft.SparkSessions
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // dev-only A/B hook: SPARK_GRAFT_TEST_CONF="k=v;k=v" applies session
-    // confs before any probe runs, so a candidate engine setting (join
-    // strategy preference, AQE knobs) can be measured against the same
-    // probes without a code edit per experiment. IGNORED in `scalepin
-    // record` mode (ADVICE r16): that mode writes the committed
-    // SCALING_PINS.json gate, and a stray env var would silently bake a
-    // non-default engine config into pinned records with no provenance.
-    val pinRecordMode =
-      args.lift(1).contains("scalepin") && args.lift(2).contains("record")
-    sys.env.get("SPARK_GRAFT_TEST_CONF").foreach { conf =>
-      if (pinRecordMode)
-        println(s"scalepin record: ignoring SPARK_GRAFT_TEST_CONF='$conf' — " +
-          "pinned gate records carry default engine config only")
-      else conf.split(';').foreach { kv =>
-        val i = kv.indexOf('=')
-        if (i > 0) spark.conf.set(kv.take(i).trim, kv.drop(i + 1).trim)
-      }
+    // arguments are checked before the session builds: a typo'd mode or
+    // query name fails in a second instead of running something else
+    val rest = args.drop(2).toSeq
+    val problem = args.lift(1) match {
+      case Some("scalepin") if rest.isEmpty || rest == Seq("record") => None
+      case Some("snapbuild") if rest.forall(_.toIntOption.exists(_ > 0)) => None
+      case Some("q") if rest.nonEmpty =>
+        val unknown = rest.filterNot(graft.SparkEntry.queries.contains)
+        if (unknown.isEmpty) None
+        else Some(s"unknown queries: ${unknown.mkString(", ")}")
+      case _ => Some(Usage)
     }
-    def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime(); val n = f
-      println(f"$name%-30s ${(System.nanoTime() - t0) / 1e9}%8.2f s  rows=$n")
+    problem.foreach { msg => System.err.println(msg); sys.exit(2) }
+    val dir = args(0)
+    val spark = graft.SparkSessions.recommended("graft-profile")
+    val ok = args(1) match {
+      case "scalepin" => scalePin(spark, dir, record = rest.nonEmpty)
+      case "snapbuild" => snapBuild(spark, dir, rest.map(_.toInt)); true
+      case "q" => timeQueries(spark, dir, rest); true
     }
-    spark.range(100).count()
-    if (args.lift(1).contains("taskbin")) {
-      // attribute "large task binary" / "task of very large size" warnings
-      // (a multi-MB serialized stage = some plan embeds a huge literal or
-      // closure) to the query that triggers them: a log4j2 appender on the
-      // root logger records the scheduler warnings, each registered query
-      // runs alone, and any query whose run emitted one is printed with
-      // the sizes. Snapshots build first so their stages are attributed
-      // to "snapshot_build", not to whichever consumer runs first.
-      import org.apache.logging.log4j.{Level, LogManager}
-      import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-      import org.apache.logging.log4j.core.appender.AbstractAppender
-      val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val app = new AbstractAppender(
-        "taskbin", null, null, true, Array.empty) {
-        override def append(e: LogEvent): Unit = {
-          val m = e.getMessage.getFormattedMessage
-          if (m.contains("large task binary") || m.contains("very large size"))
-            captured.add(m)
-        }
-      }
-      app.start()
-      val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-      ctx.getConfiguration.getRootLogger.addAppender(app, Level.WARN, null)
-      ctx.updateLoggers()
-      def drain(label: String): Unit = {
-        val sizes = Iterator.continually(captured.poll()).takeWhile(_ != null)
-          .map(m => m.substring(m.lastIndexOf("size") + 5)).toSeq
-        if (sizes.nonEmpty)
-          println(s"TASKBIN $label: ${sizes.size} warnings [${sizes.mkString(", ")}]")
-      }
-      graft.ext.dedup.DedupQueries.buildSnapshots(spark, dir)
-      graft.batch.BasketQueries.basketSnapshot(spark, dir)
-      graft.ext.text.TextQueries.lmScoreSnapshot(spark, dir)
-      graft.ext.text.TextQueries.bpeArtifacts(spark, dir)
-      graft.ext.text.TextQueries.bpeEncoded(spark, dir)
-      graft.ext.text.DsirQueries.weightFrame(spark, dir)
-      graft.ext.text.CmSketchQueries.counters(spark, dir)
-      graft.ext.sim.SimQueries.qKnnBrute(spark, dir)
-      drain("snapshot_build")
-      (graft.SparkEntry.queries.toSeq.sortBy(_._1) ++
-        graft.SparkEntry.specOnly.toSeq.sortBy(_._1)).foreach {
-        case (name, fn) =>
-          try { fn(spark, dir).count() } catch { case _: Throwable => () }
-          drain(name)
-      }
-      println("TASKBIN sweep done")
-      spark.stop(); return
+    spark.stop()
+    if (!ok) sys.exit(2)
+  }
+
+  /** Steady-state timing of named registered queries: one untimed warm
+    * run, then 5 timed runs; prints min/median so a GC or compilation
+    * hiccup in one sample can't masquerade as a plan cost. */
+  private def timeQueries(spark: SparkSession, dir: String, names: Seq[String]): Unit =
+    names.foreach { name =>
+      val fn = graft.SparkEntry.queries(name)
+      fn(spark, dir).count()
+      val samples = (1 to 5).map { _ =>
+        val t0 = System.nanoTime(); fn(spark, dir).count()
+        (System.nanoTime() - t0) / 1e9
+      }.sorted
+      println(f"$name%-30s min=${samples.head}%6.2f s  med=${samples(2)}%6.2f s")
     }
-    if (args.lift(1).contains("q")) {
-      // steady-state timing of named registered queries:
-      //   runMain graft.tools.Profile <sfDir> q <name> [<name> ...]
-      // one untimed warm run, then 5 timed runs; prints min/median so a GC
-      // or compilation hiccup in one sample can't masquerade as a plan cost
-      args.drop(2).foreach { name =>
-        val fn = graft.SparkEntry.queries(name)
-        fn(spark, dir).count()
-        val samples = (1 to 5).map { _ =>
-          val t0 = System.nanoTime(); fn(spark, dir).count()
-          (System.nanoTime() - t0) / 1e9
-        }.sorted
-        println(f"$name%-30s min=${samples.head}%6.2f s  med=${samples(2)}%6.2f s")
-      }
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("salt")) {
-      import graft.functions.{Exact, Salt}
-      val li = Tables.lineitem(spark, dir)
-        .select(col("l_returnflag").as("k"), Exact.cents(col("l_extendedprice")).as("v"))
-      val direct = li.groupBy("k").agg(sum("v").as("t")).orderBy("k").collect().toSeq
-      val salted = Salt.saltedSum(li, col("k"), col("v"), "t", 8).orderBy("k").collect().toSeq
-      val directN = li.groupBy("k").count().orderBy("k").collect().toSeq
-      val saltedN = Salt.saltedCount(li, col("k"), "count", 8).orderBy("k").collect().toSeq
-      println("SUM_EQUAL = " + (direct.toString == salted.toString))
-      println("CNT_EQUAL = " + (directN.map(_.getLong(1)).toString == saltedN.map(_.getLong(1)).toString))
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("fb")) {
-      import graft.stream.StreamPipeline
-      val out = StreamPipeline.plan(spark, StreamPipeline.read(spark, StreamPipeline.JsonFiles(args(2))))
-      val q = StreamPipeline.writer(out, StreamPipeline.ForeachBatch(
-        (df, id) => println(s"FOREACH_BATCH id=$id rows=" + df.count()),
-        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())).start()
-      q.awaitTermination()
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("udaf")) {
-      import graft.functions.{Exact, SimhashAggregator}
-      val sim = udaf(SimhashAggregator)
-      val tok = Tables.documents(spark, dir)
-        .select(col("doc_id"), explode(graft.ext.text.TextNorm.toks(col("text"))).as("tok"))
-        .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("cnt"))
-        .withColumn("h", Exact.md5Long48(col("tok")))
-      val viaUdaf = tok.groupBy("doc_id").agg(sim(col("h"), col("cnt")).as("s"))
-      viaUdaf.orderBy("doc_id").show(3)
-      val cols = graft.ext.dedup.DedupQueries.qSimhash(spark, dir)
-      val agree = viaUdaf.join(cols, "doc_id")
-        .filter(col("s") === col("simhash")).count()
-      println(s"AGREE = $agree / " + cols.count())
-      graft.plans.GraftExtensions.register(spark)
-      println("SQL_OK = " + spark.sql("SELECT array_dot_long(array(1L,2L), array(3L,4L))").head().getLong(0))
-      try {
-        spark.sql("SELECT array_dot_long(array(1, 2), array(3, 4))").head()
-        println("TYPECHECK = MISSED (int arrays accepted)")
-      } catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          println("TYPECHECK = REJECTED: " + e.getMessage.take(100))
-      }
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("lshpairs")) {
-      // Pair-volume probe for the bucketed semantic-dedup path: candidate
-      // pairs (pre-cosine) vs corpus² across scale factors. The SCALING.md
-      // claim is that LSH candidate volume tracks bucket occupancy (i.e.
-      // the corpus's real near-dup density), not n².
-      import graft.ext.dedup.DedupQueries
-      import graft.ext.sim.SimQueries
-      val n = Tables.embeddings(spark, dir).count()
-      val posts = SimQueries.lshBands(spark, dir)
-        .groupBy(col("band"), col("bh"))
-        .agg(collect_set(col("vec_id")).as("ds"))
-        .filter(size(col("ds")) >= 2)
-      val cand = posts
-        .select(explode(col("ds")).as("vec_a"), col("ds"))
-        .select(col("vec_a"), explode(col("ds")).as("vec_b"))
-        .filter(col("vec_a") < col("vec_b"))
-        .distinct().count()
-      val kept = DedupQueries.qEmbeddingDupsLsh(spark, dir).count()
-      val allPairs = n * (n - 1) / 2
-      val truth = DedupQueries.qEmbeddingDups(spark, dir)
-        .select(col("vec_a"), col("vec_b")).localCheckpoint()
-      val nTrue = truth.count()
-      println(s"LSHPAIRS dir=$dir n=$n all_pairs=$allPairs true_pairs=$nTrue " +
-        s"lsh_candidates=$cand (${"%.4f".format(cand.toDouble / allPairs)} of n2) " +
-        s"thresholded=$kept recall=${"%.3f".format(kept.toDouble / nTrue)}")
-      // Band config sweep over the CANONICAL construction
-      // (SimQueries.lshBands — the same code path the registered queries
-      // run, so these numbers can't diverge from production behavior).
-      // Expected candidate fraction on structureless vectors
-      // ≈ 1-(1-2^-bits)^bands per pair; recall is measured against the
-      // all-pairs truth set, semi-joined through the candidate graph.
-      for ((bits, nBands) <- Seq((3, 5), (4, 5), (5, 5), (6, 5),
-                                 (3, 8), (4, 10), (5, 14), (6, 22))) {
-        val nPlanes = bits * nBands
-        val c = SimQueries.lshBands(spark, dir, nPlanes, bits)
-          .groupBy(col("band"), col("bh"))
-          .agg(collect_set(col("vec_id")).as("ds"))
-          .filter(size(col("ds")) >= 2)
-          .select(explode(col("ds")).as("vec_a"), col("ds"))
-          .select(col("vec_a"), explode(col("ds")).as("vec_b"))
-          .filter(col("vec_a") < col("vec_b"))
-          .distinct().localCheckpoint()
-        val nCand = c.count()
-        val hit = truth.join(c, Seq("vec_a", "vec_b"), "left_semi").count()
-        println(s"LSHSWEEP dir=$dir bits=$bits bands=$nBands planes=$nPlanes " +
-          s"candidates=$nCand (${"%.4f".format(nCand.toDouble / allPairs)} of n2) " +
-          s"recall=${"%.3f".format(hit.toDouble / nTrue)}")
-      }
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("scale")) {
-      import graft.functions.Exact
-      // 10x lineitem (6M rows) via copy-union: does the agg scale linearly?
-      val li = Tables.lineitem(spark, dir)
-      val li10 = li.crossJoin(spark.range(10))
-      def q1(df: org.apache.spark.sql.DataFrame) = df
-        .filter(col("l_shipdate") <= lit("1999-12-31").cast("timestamp"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg((sum(Exact.cents(col("l_extendedprice") * (lit(1.0) - col("l_discount")))) / lit(100.0)).as("rev"))
-      q1(li).count()  // warm
-      time("q1 @ 1x (600k rows)")(q1(li).count())
-      time("q1 @ 10x (6M rows)")(q1(li10).count())
-      val ev = Tables.events(spark, dir)
-      val ev10 = ev.crossJoin(spark.range(10).withColumnRenamed("id", "copy"))
-        .withColumn("event_id", col("event_id") * 10 + col("copy")).drop("copy")
-      def win(df: org.apache.spark.sql.DataFrame) = df
-        .groupBy(window(col("ts"), "60 seconds", "30 seconds"), col("event_type"))
-        .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("u"))
-      win(ev).count()
-      time("window_agg @ 1x (100k)")(win(ev).count())
-      time("window_agg @ 10x (1M)")(win(ev10).count())
-      val e = graft.ext.dedup.DedupQueries.quantized(spark, dir)
-      val q = e.filter(col("vec_id") % 20 === 0)
-      def knn(corpusMult: Int) = {
-        val corpus = if (corpusMult == 1) e else e.crossJoin(spark.range(corpusMult.toLong).withColumnRenamed("id", "cp"))
-          .withColumn("vec_id", col("vec_id") * corpusMult + col("cp")).drop("cp")
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-        q.select(col("vec_id").as("qid"), col("v").as("qv"), col("nsq").as("qn"))
-          .join(corpus, col("vec_id") =!= col("qid"))
-          .withColumn("cos", graft.functions.VectorFunctions.arrayDotLong(col("qv"), col("v")).cast("double")
-            / (sqrt(col("qn").cast("double")) * sqrt(col("nsq").cast("double"))))
-          .withColumn("r", row_number().over(w)).filter(col("r") <= 5).count()
-      }
-      knn(1)
-      time("knn_brute @ 1x (100q x 2k)")(knn(1))
-      time("knn_brute @ 10x (100q x 20k)")(knn(10))
-      // TPC-H breadth: q21-style per-order aggregate at 10x rows — the
-      // shipped TWO-LEVEL shape (no distinct aggregates, so no Expand;
-      // level 1 collapses to (order, supplier) grain, level 2 counts)
-      val li10b = li.crossJoin(spark.range(10).withColumnRenamed("id", "cp"))
-        .withColumn("l_orderkey", col("l_orderkey") * 10 + col("cp")).drop("cp")
-      def q21ish(df: org.apache.spark.sql.DataFrame) = df
-        .groupBy(col("l_orderkey"), col("l_suppkey"))
-        .agg(sum(when(col("l_quantity") > 40, 1L).otherwise(0L)).as("hot_lines"))
-        .groupBy(col("l_orderkey"))
-        .agg(count(lit(1)).as("n_supp"),
-          sum(when(col("hot_lines") > 0, 1L).otherwise(0L)).as("n_hot"))
-        .filter(col("n_supp") >= 2 && col("n_hot") === 1).count()
-      q21ish(li)
-      time("q21-agg @ 1x (600k)")(q21ish(li))
-      time("q21-agg @ 10x (6M)")(q21ish(li10b))
-      // contamination-style semi-join of hashed keys at 10x
-      import graft.ext.dedup.DedupQueries
-      val sh0 = DedupQueries.shingleRows(spark, dir, dedup = false)
-        .select(col("doc_id"), Exact.md5Long(col("s")).as("h"))
-      def contam(mult: Int) = {
-        val sh = if (mult == 1) sh0
-          else sh0.crossJoin(spark.range(mult.toLong).withColumnRenamed("id", "cp"))
-            .withColumn("doc_id", col("doc_id") * mult + col("cp")).drop("cp")
-        val train = sh.filter(col("doc_id") % 20 =!= 0).select("h").distinct()
-        sh.filter(col("doc_id") % 20 === 0)
-          .join(train, Seq("h"), "left_semi")
-          .groupBy("doc_id").count().count()
-      }
-      contam(1)
-      time("contam-semi @ 1x (260k sh)")(contam(1))
-      time("contam-semi @ 10x (2.6M sh)")(contam(10))
-      // incremental-dedup probe tail against a PRE-MATERIALIZED corpus
-      // index (the persisted-snapshot regime of qIncrementalDedup): the
-      // batch is broadcast into a scan of the index, so probe time should
-      // track index-scan bandwidth, never candidate-pair volume. Copies
-      // get disjoint hashes (rehashed via xxhash64(h, cp)) — they enlarge the index
-      // without faking 10x duplicate matches (copy 0 keeps the original
-      // hashes so the batch still finds its true matches; rehashed copies
-      // could collide with real hashes only at the ~2^-60 birthday rate,
-      // noise for a timing probe).
-      val tagI = Tables.documents(spark, dir)
-        .select(col("doc_id"), (col("source") === DedupQueries.IncomingSource).as("is_new"))
-      val exI = DedupQueries.shingleRows(spark, dir)
-        .select(col("doc_id"), Exact.md5Long(col("s")).as("h"))
-        .join(broadcast(tagI), "doc_id").localCheckpoint()
-      val newShI = exI.filter(col("is_new")).localCheckpoint()
-      val nNew = broadcast(newShI.groupBy(col("doc_id")).agg(count(lit(1)).as("n_new"))
-        .withColumnRenamed("doc_id", "new_doc_id"))
-      def incrProbe(mult: Int): () => Long = {
-        val c0 = exI.filter(!col("is_new"))
-        val corpus = if (mult == 1) c0 else c0
-          .crossJoin(spark.range(mult.toLong).withColumnRenamed("id", "cp"))
-          .withColumn("doc_id", col("doc_id") * mult + col("cp"))
-          .withColumn("h", when(col("cp") === 0, col("h"))
-            .otherwise(xxhash64(col("h"), col("cp"))))
-          .drop("cp")
-        val posts = corpus.groupBy(col("h"))
-          .agg(collect_set(col("doc_id")).as("docs")).localCheckpoint()
-        val sizes = broadcast(posts.select(explode(col("docs")).as("old_doc_id"))
-          .groupBy(col("old_doc_id")).agg(count(lit(1)).as("n_old")))
-        () => posts.join(broadcast(newShI), "h")
-          .select(col("doc_id").as("new_doc_id"), explode(col("docs")).as("old_doc_id"))
-          .groupBy(col("new_doc_id"), col("old_doc_id")).agg(count(lit(1)).as("inter"))
-          .join(nNew, "new_doc_id").join(sizes, "old_doc_id")
-          .withColumn("jaccard",
-            col("inter").cast("double") / (col("n_new") + col("n_old") - col("inter")))
-          .filter(col("jaccard") >= DedupQueries.JaccardThreshold)
-          .groupBy(col("new_doc_id"))
-          .agg(count(lit(1)).as("m"), max(col("jaccard")).as("mj")).count()
-      }
-      val p1 = incrProbe(1); p1()
-      time("incr-probe @ 1x corpus")(p1())
-      val p10 = incrProbe(10); p10()
-      time("incr-probe @ 10x corpus")(p10())
-      // context-window chunking at 10x docs (narrow explode — expect ~linear
-      // in data with the fixed overhead amortizing)
-      import graft.ext.text.{TextNorm, TextQueries}
-      def chunk(mult: Int): Long = {
-        val d0 = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-        val docs = if (mult == 1) d0 else d0
-          .crossJoin(spark.range(mult.toLong).withColumnRenamed("id", "cp"))
-          .withColumn("doc_id", col("doc_id") * mult + col("cp")).drop("cp")
-        val t = TextNorm.toks(col("text"))
-        val chunkCol = slice(col("t"), col("start") + 1, lit(TextQueries.ChunkSize))
-        docs.select(col("doc_id"), t.as("t"))
-          .filter(size(col("t")) > 0)
-          .select(col("doc_id"), col("t"),
-            explode(sequence(lit(0), size(col("t")) - 1, lit(TextQueries.ChunkStride))).as("start"))
-          .select(col("doc_id"), md5(concat_ws(" ", chunkCol)).as("fp"))
-          .count()
-      }
-      chunk(1)
-      time("text_chunk @ 1x (5k docs)")(chunk(1))
-      time("text_chunk @ 10x (50k docs)")(chunk(10))
-      // component loop at 10x edges (10 disjoint copies of the embedding
-      // pair graph: same diameter, 10x per-round volume — probes whether
-      // round cost is scheduling or data)
-      def comps(mult: Int): Long = {
-        val p0 = DedupQueries.qEmbeddingDups(spark, dir)
-          .select(col("vec_a"), col("vec_b")).localCheckpoint()
-        val pairs = if (mult == 1) p0 else p0
-          .crossJoin(spark.range(mult.toLong).withColumnRenamed("id", "cp"))
-          .select((col("vec_a") * mult + col("cp")).as("vec_a"),
-            (col("vec_b") * mult + col("cp")).as("vec_b"))
-        DedupQueries.components(pairs, "vec_a", "vec_b").count()
-      }
-      comps(1)
-      time("components @ 1x (920 edges)")(comps(1))
-      time("components @ 10x (9.2k edges)")(comps(10))
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("dsir")) {
-      // stage-attributed timing of the dsir_weights build (r15): feature
-      // extraction (tokenize→bigram→md5, materialized once), the three
-      // bounded aggregates, the scoring join, the snapshot checkpoint.
-      import graft.ext.text.DsirQueries
-      for (round <- 1 to 3) {
-        graft.util.SnapshotCache.clearAll()
-        time(s"dsir_weights full build r$round")(
-          DsirQueries.weightFrame(spark, dir).count())
-      }
-      val docs = Tables.rebalanced(spark, Tables.documents(spark, dir))
-      time("featureRows count")(DsirQueries.featureRowsOf(docs).count())
-      time("featureRows count again")(DsirQueries.featureRowsOf(docs).count())
-      val fckpt = DsirQueries.featureRowsOf(docs).localCheckpoint()
-      time("feature localCheckpoint + model aggs")({
-        val (m, t) = DsirQueries.modelOf(fckpt)
-        m.count() + t.count()
-      })
-      time("scoreAgainst over ckpt")({
-        val (m, t) = DsirQueries.modelOf(fckpt)
-        DsirQueries.scoreAgainst(fckpt, m, t).count()
-      })
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("snapiso")) {
-      // isolated per-artifact build cost: width-1 pool is still
-      // concurrent-build code but one task at a time, so each task's
-      // elapsed is its own work (plus nothing) — the number in-pool
-      // attribution approximates badly when every task spans the wall
+
+  /** Pool-width probe for the concurrent snapshot_build section: wall time
+    * of SnapshotBuild.all at each width (default 4, 8, 12, 16), one
+    * discarded warm round first so codegen/classload doesn't bill the
+    * first width measured. Width 1 is the isolated per-artifact
+    * measurement: each artifact's seconds without scheduler contention. */
+  private def snapBuild(spark: SparkSession, dir: String, widths: Seq[Int]): Unit = {
+    graft.util.SnapshotCache.clearAll()
+    graft.util.SnapshotBuild.all(spark, dir) // warm (discarded)
+    for (p <- if (widths.nonEmpty) widths else Seq(4, 8, 12, 16)) {
       graft.util.SnapshotCache.clearAll()
-      graft.util.SnapshotBuild.all(spark, dir) // warm (codegen/classload)
-      graft.util.SnapshotCache.clearAll()
-      val d = graft.util.SnapshotBuild.all(spark, dir, parallelism = 1)
-      println("snapiso " + d.sortBy(-_._2)
-        .map { case (n, s) => f"$n=$s%.2f" }.mkString(", "))
-      println(f"snapiso total=${d.map(_._2).sum}%.2f s")
-      spark.stop(); return
+      val t0 = System.nanoTime()
+      val d = graft.util.SnapshotBuild.all(spark, dir, p)
+      println(f"snapbuild parallelism=$p%-3d wall=${(System.nanoTime() - t0) / 1e9}%6.2f s" +
+        s"  top5=${d.sortBy(-_._2).take(5).map { case (n, s) => f"$n=$s%.2f" }.mkString(",")}")
     }
-    if (args.lift(1).contains("snaptags")) {
-      // enumerate the snapshot-tag universe SnapshotBuild.all produces —
-      // the fixed surface graft.plans.BuilderPlans sweeps (a new artifact
-      // must appear here AND in the sweep's tag set)
-      graft.util.SnapshotCache.clearAll()
-      val names = graft.util.SnapshotBuild.all(spark, dir).map(_._1)
-      println("ATTRIBUTION: " + names.sorted.mkString(", "))
-      println("TAGS: " + graft.util.SnapshotCache.builderPlans(spark, dir)
-        .keys.toSeq.sorted.mkString(", "))
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("snapbuild")) {
-      // pool-width probe for the concurrent snapshot_build section: wall
-      // time of SnapshotBuild.all at each width, one discarded warm round
-      // first so codegen/classload doesn't bill the first width measured.
-      val widths = args.drop(2).map(_.toInt) match {
-        case w if w.nonEmpty => w.toSeq
-        case _ => Seq(4, 8, 12, 16)
+  }
+
+  /** Mechanized 10x-curve regression gate (VERDICT r14 #5): SCALING.md's
+    * scale tables were prose a plan change could silently invalidate. This
+    * mode re-measures the headline probe pairs on the ×10 fixtures and
+    * compares each query's GROWTH RATIO (x10 sec / base sec) against the
+    * committed SCALING_PINS.json; a ratio degraded by more than `PinSlack`
+    * fails with a diff (returns false: exit 2). The pins were recorded at
+    * sf0.1 on 32 cores; `SPARK_GRAFT_CPUS=32` reproduces that session
+    * (local[32], 32 shuffle partitions). Regenerate the pin file after an
+    * INTENDED plan change:
+    *   SPARK_GRAFT_CPUS=32 sbt 'runMain graft.tools.Profile <sf0.1> scalepin record'
+    * Per-reading noise policy: best-of-2 timed runs per point (the bench
+    * minimum methodology), warm pass first. */
+  private def scalePin(spark: SparkSession, dir: String, record: Boolean): Boolean = {
+    val PinSlack = 1.5
+    val pinPath = java.nio.file.Paths.get("SCALING_PINS.json")
+    val (docsDir, liDir, evDir) =
+      scale14Fixtures(spark, dir, "/tmp/graft_scalepin")
+    val fixtureDir = Map("docs" -> docsDir, "li" -> liDir, "ev" -> evDir,
+      "tpch" -> tpchX10(spark, dir, "/tmp/graft_scalepin/tpch"),
+      "emb" -> embeddingsX10(spark, dir, "/tmp/graft_scalepin/emb"))
+    def measure(name: String, d: String): Double = {
+      val fn = (graft.SparkEntry.queries ++ graft.SparkEntry.specOnly)(name)
+      fn(spark, d).count() // warm (plan + codegen + snapshot build)
+      val samples = (1 to 2).map { _ =>
+        val t0 = System.nanoTime(); fn(spark, d).count()
+        (System.nanoTime() - t0) / 1e9
       }
-      graft.util.SnapshotCache.clearAll()
-      graft.util.SnapshotBuild.all(spark, dir) // warm (discarded)
-      for (p <- widths) {
+      samples.min
+    }
+    val measured: Seq[(String, (Double, Double, Double))] =
+      PinProbes.map { case (name, fx) =>
         graft.util.SnapshotCache.clearAll()
-        val t0 = System.nanoTime()
-        val d = graft.util.SnapshotBuild.all(spark, dir, p)
-        println(f"snapbuild parallelism=$p%-3d wall=${(System.nanoTime() - t0) / 1e9}%6.2f s" +
-          s"  top5=${d.sortBy(-_._2).take(5).map { case (n, s) => f"$n=$s%.2f" }.mkString(",")}")
-      }
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("pq")) {
-      import graft.ext.sim.{PqQueries, SimQueries}
-      import graft.ext.dedup.DedupQueries.quantized
-      import graft.functions.VectorFunctions
-      val M = PqQueries.M; val SubDim = PqQueries.SubDim; val PqK = PqQueries.PqK
-      val seed = quantized(spark, dir).select(col("vec_id"), col("v"))
-        .orderBy(col("vec_id")).limit(PqK).collect()
-        .map(r => r.getSeq[Long](1).toArray)
-      val cb = Array.tabulate(M)(m => seed.map(v => v.slice(m * SubDim, (m + 1) * SubDim)))
-      def distTo(v: org.apache.spark.sql.Column, m: Int,
-                 c: Array[Long]): org.apache.spark.sql.Column =
-        lit(c.map(x => x * x).sum) -
-          lit(2L) * VectorFunctions.arrayDotLong(slice(v, m * SubDim + 1, SubDim), lit(c))
-      val codes = (0 until M).foldLeft(quantized(spark, dir).select(col("vec_id"), col("v"))) {
-        (df, m) =>
-          df.withColumn(s"code_$m",
-            array_min(array(cb(m).zipWithIndex.toIndexedSeq.map { case (c, j) =>
-              struct(distTo(col("v"), m, c).as("dist"), lit(j.toLong).as("j"))
-            }: _*)).getField("j"))
-      }.select(col("vec_id") +: (0 until M).map(m => col(s"code_$m")): _*)
-      time("encode only")(codes.count())
-      time("encode again")(codes.count())
-      val queries = quantized(spark, dir)
-        .filter(col("vec_id") % SimQueries.QueryStride === 0)
-        .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nsq").as("qn"))
-      val luts = (0 until M).foldLeft(queries) { (df, m) =>
-        df.withColumn(s"lut_$m",
-          array(cb(m).toIndexedSeq.map(c => distTo(col("qv"), m, c)): _*))
-      }.drop("qv")
-      time("luts only")(luts.count())
-      val codesC = codes.localCheckpoint()
-      val lutsC = luts.localCheckpoint()
-      val adc = (0 until M).map(m =>
-        element_at(col(s"lut_$m"), (col(s"code_$m") + 1).cast("int"))).reduce(_ + _) +
-        col("qn")
-      val joined = lutsC.join(codesC, col("vec_id") =!= col("query_id"))
-        .withColumn("adc", adc)
-      time("join+adc (checkpointed)")(joined.count())
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("query_id").orderBy(col("adc"), col("vec_id"))
-      time("full tail (checkpointed)")(
-        joined.withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= SimQueries.K).count())
-      // The un-materialized composition (luts/codes INLINE under the
-      // join+window stage) measured 43–56 s for the same tail at sf0.1 —
-      // the reason qKnnPq localCheckpoints both join inputs. Repro: swap
-      // codesC/lutsC below for codes/luts.
-      time("knn_pq full")(PqQueries.qKnnPq(spark, dir).count())
-      time("knn_pq full again")(PqQueries.qKnnPq(spark, dir).count())
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("bm25")) {
-      import graft.ext.text.TextQueries
-      time("bm25 cold")(TextQueries.qBm25(spark, dir).count())
-      time("bm25 again")(TextQueries.qBm25(spark, dir).count())
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("sem")) {
-      import graft.ext.dedup.DedupQueries
-      time("embedding pairs")(DedupQueries.qEmbeddingDups(spark, dir).count())
-      val pairs = DedupQueries.qEmbeddingDups(spark, dir)
-        .select(col("vec_a"), col("vec_b")).localCheckpoint()
-      // per-round decomposition via the production loop's own hook — no
-      // instrumented copy to drift out of sync with the real plan
-      time("components (pairs cached)")(
-        DedupQueries.components(pairs, "vec_a", "vec_b", (r, ch, s) =>
-          println(f"round $r: changed=$ch  $s%.2f s")).count())
-      time("full dedup_semantic")(DedupQueries.qSemDedup(spark, dir).count())
-      time("full again")(DedupQueries.qSemDedup(spark, dir).count())
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("scale10")) {
-      // 10x scale probe for the two slowest bench entries
-      // (dedup_semantic_bucketed, dedup_incremental): does the component
-      // loop's per-round cost stay scheduling-dominated as data grows?
-      import graft.ext.dedup.DedupQueries
-      val out = "/tmp/graft_scale10"
-      // embeddings: 10 ROTATED copies — rotation preserves the norm and
-      // decorrelates copies (near-orthogonal to the original for these
-      // dense vectors), so pair DENSITY stays ~flat while n grows 10x;
-      // exact copies would instead add 45 cosine-1.0 pairs per vector and
-      // measure a different (duplication-dominated) workload
-      val e = Tables.embeddings(spark, dir)
-      e.crossJoin(spark.range(10).toDF("copy"))
-        .select((col("vec_id") * 10 + col("copy")).as("vec_id"),
-          when(col("copy") === 0, col("embedding")).otherwise(
-            concat(slice(col("embedding"), col("copy").cast("int") * 6 + 1,
-                lit(graft.ext.sim.SimQueries.Dim)),
-              slice(col("embedding"), lit(1), col("copy").cast("int") * 6)))
-            .as("embedding"),
-          col("label"))
-        .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-      // documents: 10 EXACT copies (ids remapped) — the adversarial
-      // duplicated-corpus shape for the ingest screen: posting-list df
-      // inflates 10x, so candidate pairs grow ~100x; the probe reports
-      // the measured exponent next to the wall-times
-      Tables.documents(spark, dir)
-        .crossJoin(spark.range(10).toDF("copy"))
-        .select((col("doc_id") * 10 + col("copy")).as("doc_id"),
-          col("text"), col("lang"), col("source"), col("n_chars"))
-        .write.mode("overwrite").parquet(s"$out/documents.parquet")
-      for (d <- Seq(dir, out)) {
-        DedupQueries.clearSnapshots()
-        time(s"lsh pairgen @ $d")(DedupQueries.qEmbeddingDupsLsh(spark, d).count())
-        val pairs = DedupQueries.qEmbeddingDupsLsh(spark, d)
-          .select(col("vec_a"), col("vec_b")).localCheckpoint()
-        time(s"components @ $d")(
-          DedupQueries.components(pairs, "vec_a", "vec_b", (r, ch, s) =>
-            println(f"  round $r: changed=$ch  $s%.2f s")).count())
-        DedupQueries.clearSnapshots()
-        time(s"dedup_semantic_bucketed @ $d")(DedupQueries.qSemDedupBucketed(spark, d).count())
-        time(s"dedup_incremental @ $d")(DedupQueries.qIncrementalDedup(spark, d).count())
-      }
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("scale11")) {
-      // The incremental-screen scale claim, measured on BOTH axes:
-      // cost grows with the BATCH, not the corpus. Two fixtures —
-      // corpus x10 at fixed batch (screen should stay ~flat; only the
-      // amortized index build grows) and batch x10 at fixed corpus
-      // (screen should grow ~linearly). Copies are content-SALTED (every
-      // token suffixed per copy) so growth adds genuinely new content:
-      // exact-copy growth would multiply posting-list dup mass instead,
-      // which is the dup-density axis, not the size axis. Copy 0 keeps
-      // the original text so the batch's true matches survive verbatim.
-      import graft.ext.dedup.DedupQueries
-      import graft.ext.pipeline.CurateQueries
-      import graft.ext.text.TextQueries
-      val inc = DedupQueries.IncomingSource
-      def salted = when(col("copy") === 0, col("text")).otherwise(
-        concat_ws(" ", transform(split(col("text"), " "),
-          t => concat(t, lit("c"), col("copy").cast("string")))))
-      def grow(df: org.apache.spark.sql.DataFrame) =
-        df.crossJoin(spark.range(10).toDF("copy"))
-          .select((col("doc_id") * 10 + col("copy")).as("doc_id"),
-            salted.as("text"), col("lang"), col("source"),
-            length(salted).cast("long").as("n_chars"))
-      def keep(df: org.apache.spark.sql.DataFrame) =
-        df.select((col("doc_id") * 10).as("doc_id"), col("text"),
-          col("lang"), col("source"), col("n_chars"))
-      val docs = Tables.documents(spark, dir)
-      val fixtures = Seq(
-        "corpus_x10" -> "/tmp/graft_scale11_corpus",
-        "batch_x10" -> "/tmp/graft_scale11_batch")
-      grow(docs.filter(col("source") =!= inc))
-        .union(keep(docs.filter(col("source") === inc)))
-        .write.mode("overwrite").parquet(s"${fixtures(0)._2}/documents.parquet")
-      keep(docs.filter(col("source") =!= inc))
-        .union(grow(docs.filter(col("source") === inc)))
-        .write.mode("overwrite").parquet(s"${fixtures(1)._2}/documents.parquet")
-      for ((label, d) <- ("base" -> dir) +: fixtures) {
+        val base = measure(name, dir)
         graft.util.SnapshotCache.clearAll()
-        time(s"index build @ $label") {
-          val (posts, sizes) = DedupQueries.corpusIndex(spark, d)
-          val h = DedupQueries.corpusHashIndex(spark, d)
-          val (cnts, th) = TextQueries.pplArtifacts(spark, d)
-          posts.count() + sizes.count() + h.count() + cnts.count() + th.count()
-        }
-        time(s"curate_inc screen @ $label")(
-          CurateQueries.qCurateIncremental(spark, d).count())
-        time(s"ppl_inc screen @ $label")(
-          TextQueries.qPplBucketsIncremental(spark, d).count())
+        val x10 = measure(name, fixtureDir(fx))
+        val growth = if (base > 0) x10 / base else -1.0
+        println(f"scalepin $name%-28s base=$base%6.2f s  x10=$x10%6.2f s  growth=$growth%5.2fx")
+        name -> (base, x10, growth)
       }
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("bk")) {
-      // stage attribution for the bottom-k sketch dedup
-      import graft.ext.dedup.DedupQueries
-      import graft.functions.VectorFunctions
-      val hashed = DedupQueries.shingleRows(spark, dir, dedup = false)
-        .select(col("doc_id"), Exact.md5Long(col("s")).as("h"))
-      time("hash rows")(hashed.count())
-      val sk = hashed.groupBy(col("doc_id"))
-        .agg(VectorFunctions.bottomKPairs(col("h"), col("h"), 12).as("skp"))
-        .select(col("doc_id"), expr("transform(skp, p -> p.key)").as("sk"))
-      time("sketch agg")(sk.count())
-      val skC = sk.localCheckpoint()
-      val posts = skC.select(col("doc_id"), explode(col("sk")).as("m"))
-        .groupBy(col("m")).agg(collect_set(col("doc_id")).as("ds"))
-        .filter(size(col("ds")) >= 2)
-      time("posts (from ckpt)")(posts.count())
-      posts.select(size(col("ds")).as("n")).orderBy(col("n").desc)
-        .limit(10).collect().foreach(r => println(s"  post size ${r.getInt(0)}"))
-      val cand = posts.select(explode(col("ds")).as("a"), col("ds"))
-        .select(col("a"), explode(col("ds")).as("b")).filter(col("a") < col("b"))
-      time("raw candidate pairs")(cand.count())
-      time("distinct pairs")(cand.distinct().count())
-      time("full query")(graft.ext.dedup.KMinHashQueries.qKminhash(spark, dir).count())
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("scale11b")) {
-      // 10x multiplier probes for the round-11 additions: the KMV/sample
-      // family (events x10 with users x10 — the estimator's distinct
-      // axis AND the bounded-aggregate claim: exchange is O(groups*k)
-      // so the agg should track the scan, not the shuffle) and the DSIR
-      // family (documents x10 — count tables stay 4096-bucket-bounded,
-      // so weights should scale with the feature scan). knn_label_eval
-      // needs no probe of its own: past knn_brute (the declared
-      // all-pairs truth anchor) it is a (queries x K)-sized vote join.
-      val out = "/tmp/graft_scale11b"
-      Tables.events(spark, dir).crossJoin(spark.range(10).toDF("copy"))
-        .select((col("event_id") * 10 + col("copy")).as("event_id"), col("ts"),
-          (col("user_id") * 10 + col("copy")).as("user_id"),
-          col("event_type"), col("value"), col("props"))
-        .write.mode("overwrite").parquet(s"$out/events.parquet")
-      Tables.documents(spark, dir).crossJoin(spark.range(10).toDF("copy"))
-        .select((col("doc_id") * 10 + col("copy")).as("doc_id"),
-          col("text"), col("lang"), col("source"), col("n_chars"))
-        .write.mode("overwrite").parquet(s"$out/documents.parquet")
-      val qs = Seq("q_group_sample", "q_recent_events", "q_kmv_distinct",
-        "q_kmv_merge", "q_f2_sketch", "dsir_select", "dsir_eval",
-        "dsir_incremental", "text_cm_eval", "text_cm_merge",
-        "pack_length_batches", "pack_batch_eval", "corpus_diff")
-      // snapshots build ONCE per dataset before the timed loop (the Bench
-      // discipline — r11 ADVICE: a per-query clearAll re-timed snapshot
-      // rebuilds inside snapshot-backed entries, overstating their
-      // steady-state numbers), cleared only between datasets; the builds
-      // are timed as their own attributable lines
-      for (d <- Seq(dir, out)) {
-        graft.util.SnapshotCache.clearAll()
-        time(s"dsir_weights build @ $d")(
-          graft.ext.text.DsirQueries.weightFrame(spark, d).count())
-        time(s"cm_counters build @ $d")(
-          graft.ext.text.CmSketchQueries.counters(spark, d).count())
-        time(s"bpe_encoded build @ $d") {
-          graft.ext.text.TextQueries.bpeArtifacts(spark, d)
-          graft.ext.text.TextQueries.bpeEncoded(spark, d).count()
-        }
-        for (name <- qs) {
-          val fn = graft.SparkEntry.queries(name)
-          fn(spark, d).count() // warm (plan + codegen, snapshots prebuilt)
-          time(s"$name @ $d")(fn(spark, d).count())
-        }
+    def fmt(v: Double) = f"$v%.3f"
+    if (record) {
+      val body = measured.map { case (n, (b, x, g)) =>
+        s"""  "$n": {"base_sec": ${fmt(b)}, "x10_sec": ${fmt(x)}, "growth": ${fmt(g)}}"""
+      }.mkString("{\n", ",\n", "\n}\n")
+      java.nio.file.Files.write(pinPath, body.getBytes("UTF-8"))
+      println(s"scalepin recorded ${measured.size} pins -> $pinPath")
+      true
+    } else {
+      require(java.nio.file.Files.exists(pinPath),
+        s"missing $pinPath; record it first with Profile <dir> scalepin record")
+      val Entry =
+        ("""^\s*"([^"]+)":\s*\{"base_sec":\s*([0-9.]+),\s*"x10_sec":\s*""" +
+          """([0-9.]+),\s*"growth":\s*([0-9.]+)\}.*$""").r
+      val pins = new String(java.nio.file.Files.readAllBytes(pinPath), "UTF-8")
+        .linesIterator.collect {
+          case Entry(k, b, x, g) => k -> (b.toDouble, x.toDouble, g.toDouble)
+        }.toMap
+      val missing = PinProbes.map(_._1).filterNot(pins.contains)
+      // degraded = the growth ratio AND the 10x absolute time both
+      // exceed their pins by the slack. Ratio alone is fragile the
+      // wrong way: a quieter host shrinks the sub-second BASE readings
+      // faster than the x10 ones and "degrades" the ratio of a run
+      // whose absolute times all IMPROVED (observed on the first check
+      // run: every x10 below its pin, two ratios above slack). The
+      // x10-time conjunct anchors the gate to what it protects — cost
+      // at scale.
+      val degraded = measured.collect {
+        case (n, (_, x, g)) if pins.get(n).exists { case (_, px, pg) =>
+            g > pg * PinSlack && x > px * PinSlack } =>
+          f"$n: growth $g%.2fx vs pinned ${pins(n)._3}%.2fx AND x10 " +
+            f"$x%.2fs vs pinned ${pins(n)._2}%.2fs (slack ${PinSlack}x)"
       }
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("scale12")) {
-      // 10x multiplier probe for the embedding families without one:
-      // the PQ tiers (knn_pq's ADC codes scan claims linear-in-corpus at
-      // a fixed query batch; knn_ivf_pq adds cell pruning in front), the
-      // spectral kernel (emb_power_iter claims nothing wider than the
-      // embedding scan per round), the drift monitor, and the kmeans
-      // trainer (K centroids on the driver, corpus-linear assignment).
-      // Same generator as scale10b: rotated copies (norm-preserving,
-      // decorrelated), copies > 0 remapped OFF the query stride so the
-      // query set stays fixed while the corpus grows 10x.
-      import graft.ext.sim.SimQueries
-      val out = "/tmp/graft_scale12"
-      // copy stride derived from the ACTUAL max id (ADVICE r12): a fixed
-      // 1e6 offset collides across copies once vec_id*20+1 >= 1e6. With
-      // span = max*20+2, copy c's remapped range [c*span+1, (c+1)*span-1]
-      // is disjoint from every other copy and from copy 0's [0, max]; and
-      // span % 20 = 2 keeps every remapped id at 2c+1 (mod 20) — odd, so
-      // never on the query stride, at ANY corpus size. (Generator factored
-      // to [[embeddingsX10]], shared with the scalepin gate.)
-      embeddingsX10(spark, dir, out)
-      val qs = Seq("knn_pq", "knn_ivf_pq", "knn_ivf_trained",
-        "emb_power_iter", "emb_drift", "kmeans_train")
-      for (d <- Seq(dir, out)) {
-        graft.util.SnapshotCache.clearAll()
-        time(s"knn_truth build @ $d")(SimQueries.qKnnBrute(spark, d).count())
-        for (name <- qs) {
-          val fn = graft.SparkEntry.queries(name)
-          fn(spark, d).count() // warm (plan + codegen + codebook/centroid snapshots)
-          time(s"$name @ $d")(fn(spark, d).count())
-        }
-      }
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("scale13")) {
-      // 10x multiplier probes for the last families without a measured
-      // curve (VERDICT r12 #6/#7):
-      //  - graph_{pagerank,triangles,kcore} + the privacy ladder over
-      //    documents x10 (content-SALTED copies, the scale11 generator:
-      //    each copy replicates the original near-dup structure without
-      //    inflating posting-list dup mass, so edges and nodes both grow
-      //    ~10x — the size axis). The jaccard pair snapshot the graph
-      //    family iterates over is timed separately, like scale12's
-      //    knn_truth.
-      //  - er_{fuzzy,canonical,resolve} over part x10 with copies > 0
-      //    suffixed by pairwise-DISTANT tokens (lev > ErMaxDist across
-      //    copies and vs originals), so the vocabulary and the match
-      //    graph grow 10x WITHOUT cross-copy merges — new entities, not
-      //    new duplicates.
-      //  - q_weighted_median over lineitem x10 with prices perturbed
-      //    +copy cents: the adversarial axis for the count-of-counts
-      //    contraction — the (flag, value) window frame itself grows
-      //    ~10x, not just the scan (a pure copy would hold it constant).
-      val out = "/tmp/graft_scale13"
-      def salted = when(col("copy") === 0, col("text")).otherwise(
-        concat_ws(" ", transform(split(col("text"), " "),
-          t => concat(t, lit("c"), col("copy").cast("string")))))
-      Tables.documents(spark, dir).crossJoin(spark.range(10).toDF("copy"))
-        .select((col("doc_id") * 10 + col("copy")).as("doc_id"),
-          salted.as("text"), col("lang"), col("source"),
-          length(salted).cast("long").as("n_chars"))
-        .write.mode("overwrite").parquet(s"$out/docs/documents.parquet")
-      Tables.part(spark, dir).crossJoin(spark.range(10).toDF("copy"))
-        .withColumn("p_partkey", col("p_partkey") * 10 + col("copy"))
-        .withColumn("p_name", when(col("copy") === 0, col("p_name"))
-          .otherwise(concat(col("p_name"), lit(" "),
-            expr("repeat(chr(96 + copy), 4)"), col("copy").cast("string"))))
-        .drop("copy")
-        .write.mode("overwrite").parquet(s"$out/er/part.parquet")
-      Tables.lineitem(spark, dir).crossJoin(spark.range(10).toDF("copy"))
-        .withColumn("l_orderkey", col("l_orderkey") * 10 + col("copy"))
-        .withColumn("l_extendedprice",
-          col("l_extendedprice") + col("copy").cast("double") / 100.0)
-        .drop("copy")
-        .write.mode("overwrite").parquet(s"$out/li/lineitem.parquet")
-      // q_forget spans all four fact tables (deletion list from customer,
-      // cascade cardinalities through orders/lineitem/events) — its own
-      // x10 fixture with consistent key remaps
-      Tables.customer(spark, dir).crossJoin(spark.range(10).toDF("copy"))
-        .withColumn("c_custkey", col("c_custkey") * 10 + col("copy"))
-        .drop("copy")
-        .write.mode("overwrite").parquet(s"$out/facts/customer.parquet")
-      Tables.orders(spark, dir).crossJoin(spark.range(10).toDF("copy"))
-        .withColumn("o_orderkey", col("o_orderkey") * 10 + col("copy"))
-        .withColumn("o_custkey", col("o_custkey") * 10 + col("copy"))
-        .drop("copy")
-        .write.mode("overwrite").parquet(s"$out/facts/orders.parquet")
-      Tables.lineitem(spark, dir).crossJoin(spark.range(10).toDF("copy"))
-        .withColumn("l_orderkey", col("l_orderkey") * 10 + col("copy"))
-        .drop("copy")
-        .write.mode("overwrite").parquet(s"$out/facts/lineitem.parquet")
-      Tables.events(spark, dir).crossJoin(spark.range(10).toDF("copy"))
-        .withColumn("user_id", col("user_id") * 10 + col("copy"))
-        .drop("copy")
-        .write.mode("overwrite").parquet(s"$out/facts/events.parquet")
-      def probe(label: String, d: String, names: Seq[String]): Unit =
-        names.foreach { name =>
-          val fn = graft.SparkEntry.queries(name)
-          fn(spark, d).count() // warm (plan + codegen)
-          time(s"$name @ $label")(fn(spark, d).count())
-        }
-      for ((label, d) <- Seq("base" -> dir, "docs_x10" -> s"$out/docs")) {
-        graft.util.SnapshotCache.clearAll()
-        time(s"jaccard_pairs build @ $label")(
-          graft.ext.dedup.DedupQueries.jaccardPairSnapshot(spark, d).count())
-        probe(label, d, Seq("graph_pagerank", "graph_triangles", "graph_kcore",
-          "q_k_anonymity", "q_anon_generalize", "q_l_diversity"))
-      }
-      for ((label, d) <- Seq("base" -> dir, "part_x10" -> s"$out/er"))
-        probe(label, d, Seq("er_fuzzy", "er_canonical", "er_resolve"))
-      for ((label, d) <- Seq("base" -> dir, "li_x10" -> s"$out/li"))
-        probe(label, d, Seq("q_weighted_median"))
-      for ((label, d) <- Seq("base" -> dir, "facts_x10" -> s"$out/facts"))
-        probe(label, d, Seq("q_forget"))
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("scale14")) {
-      // 10x curve for the multimodal family (VERDICT r13 #6) — the last
-      // dedup-family member without a measured scale row. Fixture: the
-      // scale13 content-salt generator (each copy replicates the
-      // original's near-dup structure without inflating cross-copy dup
-      // mass), so the media corpus [[graft.ext.multimodal.Multimodal
-      // .corpus]] derives from grows 10x in items AND distinct payloads —
-      // digests, frame explosion, and sig-pair candidates all grow on
-      // their own axis instead of collapsing into one dup class. Also
-      // probes the two r14 median-family twins on their scale13
-      // adversarial fixtures (lineitem x10 with perturbed prices for the
-      // bucketed weighted median; events x10 value-salted for the
-      // approx MAD gate) so SCALING.md's swap claim is measured, not
-      // asserted.
-      val (docsDir, liDir, evDir) =
-        scale14Fixtures(spark, dir, "/tmp/graft_scale14")
-      def probe(label: String, d: String, names: Seq[String]): Unit =
-        names.foreach { name =>
-          val fn = (graft.SparkEntry.queries ++ graft.SparkEntry.specOnly)(name)
-          fn(spark, d).count() // warm (plan + codegen)
-          time(s"$name @ $label")(fn(spark, d).count())
-        }
-      for ((label, d) <- Seq("base" -> dir, "docs_x10" -> docsDir)) {
-        graft.util.SnapshotCache.clearAll()
-        probe(label, d, Seq("mm_meta", "mm_features", "mm_frames",
-          "mm_dedup", "mm_frames_dedup"))
-      }
-      for ((label, d) <- Seq("base" -> dir, "li_x10" -> liDir))
-        probe(label, d, Seq("q_weighted_median", "q_weighted_median_bucketed"))
-      for ((label, d) <- Seq("base" -> dir, "ev_x10" -> evDir))
-        probe(label, d, Seq("q_mad_outliers", "q_mad_outliers_approx"))
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("scalepin")) {
-      // Mechanized 10x-curve regression gate (VERDICT r14 #5): SCALING.md's
-      // scale tables were prose a plan change could silently invalidate.
-      // This mode re-measures the headline probe pairs on the scale14
-      // fixtures and compares each query's GROWTH RATIO (x10 sec / base
-      // sec) against the committed SCALING_PINS.json; a ratio degraded by
-      // more than [[PinSlack]] fails with a diff (exit 2). Regenerate the
-      // pin file after an INTENDED plan change:
-      //   sbt 'runMain graft.tools.Profile <sf0.1> scalepin record'
-      // Per-reading noise policy: best-of-2 timed runs per point (the
-      // bench minimum methodology), warm pass first.
-      val PinSlack = 1.5
-      val pinPath = java.nio.file.Paths.get("SCALING_PINS.json")
-      val (docsDir, liDir, evDir) =
-        scale14Fixtures(spark, dir, "/tmp/graft_scalepin")
-      val fixtureDir = Map("docs" -> docsDir, "li" -> liDir, "ev" -> evDir,
-        "tpch" -> tpchX10(spark, dir, "/tmp/graft_scalepin/tpch"),
-        "emb" -> embeddingsX10(spark, dir, "/tmp/graft_scalepin/emb"))
-      def measure(name: String, d: String): Double = {
-        val fn = (graft.SparkEntry.queries ++ graft.SparkEntry.specOnly)(name)
-        fn(spark, d).count() // warm (plan + codegen + snapshot build)
-        val samples = (1 to 2).map { _ =>
-          val t0 = System.nanoTime(); fn(spark, d).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        samples.min
-      }
-      val measured: Seq[(String, (Double, Double, Double))] =
-        PinProbes.map { case (name, fx) =>
-          graft.util.SnapshotCache.clearAll()
-          val base = measure(name, dir)
-          graft.util.SnapshotCache.clearAll()
-          val x10 = measure(name, fixtureDir(fx))
-          val growth = if (base > 0) x10 / base else -1.0
-          println(f"scalepin $name%-28s base=$base%6.2f s  x10=$x10%6.2f s  growth=$growth%5.2fx")
-          name -> (base, x10, growth)
-        }
-      def fmt(v: Double) = f"$v%.3f"
-      if (args.lift(2).contains("record")) {
-        val body = measured.map { case (n, (b, x, g)) =>
-          s"""  "$n": {"base_sec": ${fmt(b)}, "x10_sec": ${fmt(x)}, "growth": ${fmt(g)}}"""
-        }.mkString("{\n", ",\n", "\n}\n")
-        java.nio.file.Files.write(pinPath, body.getBytes("UTF-8"))
-        println(s"scalepin recorded ${measured.size} pins -> $pinPath")
+      if (missing.nonEmpty)
+        println(s"scalepin MISSING pins (re-record): ${missing.mkString(", ")}")
+      if (degraded.nonEmpty) {
+        println("scalepin DEGRADED growth ratios: a plan change hurt the " +
+          "10x curve; fix it or re-record the pin with the regression " +
+          "explained in SCALING.md:\n  " + degraded.mkString("\n  "))
+        false
       } else {
-        require(java.nio.file.Files.exists(pinPath),
-          s"missing $pinPath — record it first: Profile <dir> scalepin record")
-        val Entry =
-          ("""^\s*"([^"]+)":\s*\{"base_sec":\s*([0-9.]+),\s*"x10_sec":\s*""" +
-            """([0-9.]+),\s*"growth":\s*([0-9.]+)\}.*$""").r
-        val pins = new String(java.nio.file.Files.readAllBytes(pinPath), "UTF-8")
-          .linesIterator.collect {
-            case Entry(k, b, x, g) => k -> (b.toDouble, x.toDouble, g.toDouble)
-          }.toMap
-        val missing = PinProbes.map(_._1).filterNot(pins.contains)
-        // degraded = the growth ratio AND the 10x absolute time both
-        // exceed their pins by the slack. Ratio alone is fragile the
-        // wrong way: a quieter host shrinks the sub-second BASE readings
-        // faster than the x10 ones and "degrades" the ratio of a run
-        // whose absolute times all IMPROVED (observed on the first check
-        // run: every x10 below its pin, two ratios above slack). The
-        // x10-time conjunct anchors the gate to what it protects — cost
-        // at scale.
-        val degraded = measured.collect {
-          case (n, (_, x, g)) if pins.get(n).exists { case (_, px, pg) =>
-              g > pg * PinSlack && x > px * PinSlack } =>
-            f"$n: growth $g%.2fx vs pinned ${pins(n)._3}%.2fx AND x10 " +
-              f"$x%.2fs vs pinned ${pins(n)._2}%.2fs (slack ${PinSlack}x)"
-        }
-        if (missing.nonEmpty)
-          println(s"scalepin MISSING pins (re-record): ${missing.mkString(", ")}")
-        if (degraded.nonEmpty) {
-          println("scalepin DEGRADED growth ratios — a plan change hurt the " +
-            "10x curve; fix it or re-record the pin with the regression " +
-            "explained in SCALING.md:\n  " + degraded.mkString("\n  "))
-          spark.stop(); sys.exit(2)
-        }
         println(s"scalepin OK: ${measured.size} growth ratios within " +
           s"${PinSlack}x of SCALING_PINS.json")
+        true
       }
-      spark.stop(); return
     }
-    if (args.lift(1).contains("scale10d")) {
-      // 10x multiplier probes for the round-10-continuation additions:
-      // text_lm_score + q_l_diversity (documents x10), q_drift_ks
-      // (events x10 — grain-bounded like the TV monitor),
-      // q_interval_coverage (orders x10 with customers remapped: more
-      // partitions, constant per-partition depth — the scale axis the
-      // window plan claims), q_basket_rules (lineitem+orders x10 with
-      // order keys remapped: more baskets at constant basket width — the
-      // Apriori bound's own axis). Same copy-union method as scale10b/c.
-      val out = "/tmp/graft_scale10d"
-      Tables.events(spark, dir).crossJoin(spark.range(10).toDF("copy"))
-        .select((col("event_id") * 10 + col("copy")).as("event_id"), col("ts"),
-          (col("user_id") * 10 + col("copy")).as("user_id"),
-          col("event_type"), col("value"), col("props"))
-        .write.mode("overwrite").parquet(s"$out/events.parquet")
-      Tables.documents(spark, dir).crossJoin(spark.range(10).toDF("copy"))
-        .select((col("doc_id") * 10 + col("copy")).as("doc_id"),
-          col("text"), col("lang"), col("source"), col("n_chars"))
-        .write.mode("overwrite").parquet(s"$out/documents.parquet")
-      Tables.orders(spark, dir).crossJoin(spark.range(10).toDF("copy"))
-        .select((col("o_orderkey") * 10 + col("copy")).as("o_orderkey"),
-          (col("o_custkey") * 10 + col("copy")).as("o_custkey"),
-          col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"),
-          col("o_orderpriority"))
-        .write.mode("overwrite").parquet(s"$out/orders.parquet")
-      Tables.lineitem(spark, dir).crossJoin(spark.range(10).toDF("copy"))
-        .select((col("l_orderkey") * 10 + col("copy")).as("l_orderkey"),
-          col("l_partkey"), col("l_suppkey"), col("l_linenumber"),
-          col("l_quantity"), col("l_extendedprice"), col("l_discount"),
-          col("l_tax"), col("l_returnflag"), col("l_linestatus"),
-          col("l_shipdate"))
-        .write.mode("overwrite").parquet(s"$out/lineitem.parquet")
-      Tables.part(spark, dir)
-        .write.mode("overwrite").parquet(s"$out/part.parquet")
-      // customers x10 with remapped keys, consistent with the orders remap
-      // (o_custkey = c_custkey * 10 + copy), so FK reachability and the
-      // per-customer cascade shape survive the growth
-      Tables.customer(spark, dir).crossJoin(spark.range(10).toDF("copy"))
-        .select((col("c_custkey") * 10 + col("copy")).as("c_custkey"),
-          col("c_name"), col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"))
-        .write.mode("overwrite").parquet(s"$out/customer.parquet")
-      val qs = Seq("q_drift_ks", "q_l_diversity", "q_interval_coverage",
-        "q_basket_rules", "text_lm_score",
-        "q_forget", "q_pit_features", "q_weighted_median",
-        "dedup_minhash_sweep", "bpe_train", "text_lm_eval")
-      for (d <- Seq(dir, out); name <- qs) {
-        val fn = graft.SparkEntry.queries(name)
-        fn(spark, d).count() // warm
-        time(s"$name @ $d")(fn(spark, d).count())
-      }
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("scale10c")) {
-      // 10x multiplier probes for the round-10 additions: the monitor
-      // family + MV merge (events x10), phrase search (documents x10),
-      // and the kcore/triplets KERNELS on disjoint pair-graph copies —
-      // kernel-attributed so the measurement is the operator's plan, not
-      // the pair-snapshot rebuild (probed separately by scale10).
-      // q_weighted_sample needs no probe of its own: past the shared
-      // snapshot it IS mix_dupweight's broadcast join + a narrow filter.
-      import graft.ext.dedup.DedupQueries
-      import graft.ext.graph.GraphQueries
-      import graft.ext.pipeline.CurateQueries
-      val out = "/tmp/graft_scale10c"
-      // events: 10 copies, event/user ids remapped, time structure kept —
-      // days x types grain unchanged, so the MV/monitor outputs stay
-      // bounded while the fact grows 10x (exactly the at-scale claim)
-      Tables.events(spark, dir).crossJoin(spark.range(10).toDF("copy"))
-        .select((col("event_id") * 10 + col("copy")).as("event_id"), col("ts"),
-          (col("user_id") * 10 + col("copy")).as("user_id"),
-          col("event_type"), col("value"), col("props"))
-        .write.mode("overwrite").parquet(s"$out/events.parquet")
-      // documents: 10 exact copies, ids remapped (the scale10 shape)
-      Tables.documents(spark, dir).crossJoin(spark.range(10).toDF("copy"))
-        .select((col("doc_id") * 10 + col("copy")).as("doc_id"),
-          col("text"), col("lang"), col("source"), col("n_chars"))
-        .write.mode("overwrite").parquet(s"$out/documents.parquet")
-      val evQs = Seq("q_mv_merge", "q_mad_outliers", "q_drift_tv",
-        "q_anomaly_days", "q_skew_metrics", "text_phrase_search")
-      for (d <- Seq(dir, out); name <- evQs) {
-        val fn = graft.SparkEntry.queries(name)
-        fn(spark, d).count() // warm
-        time(s"$name @ $d")(fn(spark, d).count())
-      }
-      // kernel-attributed probes: grow ONLY the pair graph (10 disjoint
-      // copies of the real one), so the measurement is the operator's own
-      // plan, not the snapshot rebuild (which scale10 probes separately)
-      DedupQueries.clearSnapshots()
-      val p0 = DedupQueries.jaccardPairSnapshot(spark, dir)
-        .select(col("doc_a").as("a"), col("doc_b").as("b")).localCheckpoint()
-      val docs0 = Tables.documents(spark, dir).select(col("doc_id")).localCheckpoint()
-      def pairsX(mult: Int) = if (mult == 1) p0 else p0
-        .crossJoin(spark.range(mult.toLong).toDF("cp"))
-        .select((col("a") * mult + col("cp")).as("a"),
-          (col("b") * mult + col("cp")).as("b"))
-      def docsX(mult: Int) = if (mult == 1) docs0 else docs0
-        .crossJoin(spark.range(mult.toLong).toDF("cp"))
-        .select((col("doc_id") * mult + col("cp")).as("doc_id"))
-      def kcore(mult: Int): Long = GraphQueries.kcoreFrom(pairsX(mult)).count()
-      kcore(1); time("graph_kcore @ 1x edges")(kcore(1))
-      time("graph_kcore @ 10x edges")(kcore(10))
-      def trip(mult: Int): Long = CurateQueries.tripletsFrom(
-        pairsX(mult).select(col("a").as("doc_a"), col("b").as("doc_b")),
-        docsX(mult)).count()
-      trip(1); time("train_triplets @ 1x pairs+docs")(trip(1))
-      time("train_triplets @ 10x pairs+docs")(trip(10))
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("scale10b")) {
-      // 10x multiplier probes for the round-9 families (VERDICT r9 ask
-      // #4): er_resolve (vocabulary x10), q_global_rank (docs x10),
-      // ann_eval (corpus x10 at a FIXED query set), graph_triangles
-      // (edges x10) — same copy-union method as the round-1 scan/agg/knn
-      // probes and the dedup-family probes since.
-      import graft.ext.dedup.DedupQueries
-      import graft.ext.graph.GraphQueries
-      import graft.ext.sim.SimQueries
-      val out = "/tmp/graft_scale10b"
-      // part: copy 0 keeps the original name (base vocabulary + its
-      // matches survive verbatim); salted copies append ' v<copy>' —
-      // near-variants of their base (dist <= 2), the dirty-catalog-grew-
-      // 10x shape. Suffix blocks split on the salt; prefix blocks grow
-      // 10x in occupancy — the adversarial side of compound blocking.
-      Tables.part(spark, dir).crossJoin(spark.range(10).toDF("copy"))
-        .withColumn("p_partkey", col("p_partkey") * 10 + col("copy"))
-        .withColumn("p_name", when(col("copy") === 0, col("p_name"))
-          .otherwise(concat(col("p_name"), lit(" v"), col("copy"))))
-        .drop("copy")
-        .write.mode("overwrite").parquet(s"$out/part.parquet")
-      // documents: 10 exact copies, ids remapped (the scale10 shape)
-      Tables.documents(spark, dir).crossJoin(spark.range(10).toDF("copy"))
-        .select((col("doc_id") * 10 + col("copy")).as("doc_id"),
-          col("text"), col("lang"), col("source"), col("n_chars"))
-        .write.mode("overwrite").parquet(s"$out/documents.parquet")
-      // embeddings: rotated copies (norm-preserving, decorrelated — the
-      // scale10 rationale); copy 0 keeps its ids, copies > 0 remap to
-      // ids ≡ 1 (mod QueryStride) so the QUERY SET stays fixed while the
-      // corpus grows 10x — the deployment shape (fixed query workload,
-      // growing corpus). An id map that multiplied queries too would
-      // measure q·n growth, not corpus growth.
-      // copy span derived from the ACTUAL max id, as in scale12 (ADVICE
-      // r12): a fixed 1e6 offset collides across copies once
-      // vec_id*20+1 >= 1e6. span = max*20+2 keeps copy ranges disjoint
-      // and every remapped id odd — off the query stride at any size.
-      val maxVecId10b = Tables.embeddings(spark, dir)
-        .agg(max(col("vec_id"))).head.getLong(0)
-      val copySpan10b = maxVecId10b * SimQueries.QueryStride.toLong + 2
-      Tables.embeddings(spark, dir).crossJoin(spark.range(10).toDF("copy"))
-        .select(
-          when(col("copy") === 0, col("vec_id"))
-            .otherwise(col("copy") * copySpan10b + col("vec_id") * lit(SimQueries.QueryStride.toLong) + 1)
-            .as("vec_id"),
-          when(col("copy") === 0, col("embedding")).otherwise(
-            concat(slice(col("embedding"), col("copy").cast("int") * 6 + 1,
-                lit(SimQueries.Dim)),
-              slice(col("embedding"), lit(1), col("copy").cast("int") * 6)))
-            .as("embedding"),
-          col("label"))
-        .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-      for (d <- Seq(dir, out)) {
-        DedupQueries.clearSnapshots()
-        graft.ext.er.ErQueries.qErResolve(spark, d).count() // warm
-        time(s"er_resolve @ $d")(graft.ext.er.ErQueries.qErResolve(spark, d).count())
-        graft.ext.pipeline.CurateQueries.qGlobalRank(spark, d).count()
-        time(s"q_global_rank @ $d")(graft.ext.pipeline.CurateQueries.qGlobalRank(spark, d).count())
-        SimQueries.qAnnEval(spark, d).count()
-        time(s"ann_eval @ $d")(SimQueries.qAnnEval(spark, d).count())
-      }
-      // graph_triangles: the kernel itself on 10 DISJOINT copies of the
-      // real pair graph (the components-probe method) — attributable to
-      // the triangle plan, not to pair-snapshot rebuild over a
-      // duplicated corpus (that rebuild has its own probe in scale10)
-      DedupQueries.clearSnapshots()
-      val p0 = DedupQueries.jaccardPairSnapshot(spark, dir)
-        .select(col("doc_a").as("a"), col("doc_b").as("b")).localCheckpoint()
-      def tri(mult: Int): Long = {
-        val pairs = if (mult == 1) p0 else p0
-          .crossJoin(spark.range(mult.toLong).toDF("cp"))
-          .select((col("a") * mult + col("cp")).as("a"),
-            (col("b") * mult + col("cp")).as("b"))
-        GraphQueries.trianglesFrom(pairs).count()
-      }
-      tri(1)
-      time("graph_triangles @ 1x edges")(tri(1))
-      time("graph_triangles @ 10x edges")(tri(10))
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("sem2")) {
-      // Head-to-head: all-pairs vs LSH-bucketed semantic dedup, COLD
-      // (snapshots cleared between runs so each timing owns its full
-      // pipeline — pair generation + components + label attach).
-      import graft.ext.dedup.DedupQueries
-      for (rep <- 1 to 3) {
-        DedupQueries.clearSnapshots()
-        time(s"pairgen all-pairs #$rep")(DedupQueries.qEmbeddingDups(spark, dir).count())
-        time(s"pairgen lsh #$rep")(DedupQueries.qEmbeddingDupsLsh(spark, dir).count())
-        DedupQueries.clearSnapshots()
-        time(s"semantic all-pairs #$rep")(DedupQueries.qSemDedup(spark, dir).count())
-        DedupQueries.clearSnapshots()
-        time(s"semantic bucketed #$rep")(DedupQueries.qSemDedupBucketed(spark, dir).count())
-      }
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("ssjoin")) {
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.stream.StreamPipeline
-      val evs = spark.readStream.schema("user_id LONG, event_time TIMESTAMP, amount DOUBLE")
-        .json(args(2))
-      val profs = spark.readStream.schema("p_user_id LONG, update_time TIMESTAMP, segment STRING")
-        .json(args(3))
-      val q = StreamPipeline.joinStreams(evs, profs)
-        .select("user_id", "event_time", "amount", "segment")
-        .writeStream.outputMode("append").format("console")
-        .option("truncate", "false").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("bucket")) {
-      import graft.sources.{Io, Tables}
-      System.setProperty("derby.system.home", "/tmp/graft_bucket_demo")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      Io.writeBucketed(Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_quantity")),
-        "li_b", "l_orderkey", 8, Some("l_orderkey"))
-      Io.writeBucketed(Tables.orders(spark, dir).select(col("o_orderkey"), col("o_totalprice")),
-        "ord_b", "o_orderkey", 8, Some("o_orderkey"))
-      val j = spark.table("li_b").join(spark.table("ord_b"), col("l_orderkey") === col("o_orderkey"))
-      println("JOIN ROWS = " + j.count())
-      val plan = j.queryExecution.executedPlan.toString
-      println("HAS_SHUFFLE = " + plan.contains("Exchange hashpartitioning"))
-      println("BUCKETED_SCAN = " + plan.contains("Bucketed: true"))
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("session")) {
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.stream.{SessionEvent, Sessionize, StreamPipeline}
-      import spark.implicits._
-      val raw = StreamPipeline.read(spark, StreamPipeline.JsonFiles(args(2)))
-      val events = graft.etl.RefPipeline.parse(raw)
-        .select(col("user_id").cast("long").as("user_id"),
-          to_timestamp(col("event_time")).as("event_time"),
-          coalesce(col("amount"), lit(0.0)).as("amount"))
-        .as[SessionEvent]
-      val q = Sessionize(events, gapSeconds = 60).toDF()
-        .writeStream.outputMode("append").format("console")
-        .option("truncate", "false").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("simhash")) {
-      import graft.ext.dedup.DedupQueries
-      val sim = DedupQueries.qSimhash(spark, dir)
-      time("qSimhash")(sim.count())
-      time("qSimhash again")(sim.count())
-      val chunks = sim.select(col("doc_id"), col("simhash"),
-        explode(sequence(lit(0), lit(3))).as("c"))
-        .withColumn("chunk", expr("shiftright(simhash, 12 * c) & 4095"))
-      time("chunks")(chunks.count())
-      val a = chunks.as("a"); val b = chunks.as("b")
-      time("join only")(a.join(b, col("a.c") === col("b.c") && col("a.chunk") === col("b.chunk") && col("a.doc_id") < col("b.doc_id")).count())
-      time("full pairs query")(DedupQueries.qSimhashPairs(spark, dir).count())
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("lsh")) {
-      import graft.ext.sim.SimQueries
-      val truth = SimQueries.qKnnBrute(spark, dir)
-        .select("query_id", "neighbor_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val lsh = SimQueries.qKnnLsh(spark, dir)
-        .select("query_id", "neighbor_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val n = graft.ext.dedup.DedupQueries.quantized(spark, dir).count()
-      val bands = SimQueries.lshBands(spark, dir)
-      val qb = bands.select(col("vec_id").as("query_id"), col("band"), col("bh"))
-        .filter(col("query_id") % SimQueries.QueryStride === 0)
-      val nq = qb.select("query_id").distinct().count()
-      val cands = qb.join(bands, Seq("band", "bh"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select("query_id", "vec_id").distinct().count()
-      println(f"RECALL = ${truth.intersect(lsh).size.toDouble / truth.size}%.3f  " +
-        f"CAND_FRACTION = ${cands.toDouble / (nq * (n - 1))}%.3f  " +
-        s"(planes=${SimQueries.NPlanes} perBand=${SimQueries.PlanesPerBand})")
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("jac2")) {
-      import graft.ext.dedup.DedupQueries
-      val ex = DedupQueries.shingleRows(spark, dir, dedup = false)
-        .select(col("doc_id"), Exact.md5Long(col("s")).as("h"))
-      ex.count() // warm
-      time("ex (shingle+hash)")(ex.count())
-      var posts: org.apache.spark.sql.DataFrame = null
-      time("posts agg+checkpoint")({
-        posts = ex.groupBy(col("h")).agg(collect_set(col("doc_id")).as("docs")).localCheckpoint()
-        posts.count()
-      })
-      val sizes = posts.select(explode(col("docs")).as("doc_id"))
-        .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      time("sizes from posts")(sizes.count())
-      val inter = posts.filter(size(col("docs")) >= 2)
-        .select(explode(col("docs")).as("doc_a"), col("docs"))
-        .select(col("doc_a"), explode(col("docs")).as("doc_b"))
-        .filter(col("doc_a") < col("doc_b"))
-        .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
-      time("inter from posts")(inter.count())
-      val joined = inter
-        .join(broadcast(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "n_a")), "doc_a")
-        .join(broadcast(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "n_b")), "doc_b")
-        .withColumn("jaccard", col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")))
-        .filter(col("jaccard") >= DedupQueries.JaccardThreshold)
-      time("joined (full tail)")(joined.count())
-      time("joined again")(joined.count())
-      time("full jaccard (2nd build)")(DedupQueries.qNgramJaccard(spark, dir).count())
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("jac")) {
-      import graft.ext.dedup.DedupQueries
-      sys.env.get("SPARK_PROFILE_COALESCE").foreach(v =>
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", v))
-      val raw = DedupQueries.shingleRows(spark, dir, dedup = false)
-      raw.count()  // warm
-      time("shingleRows nodedup")(raw.count())
-      time("md5Long no-shuffle")(
-        raw.select(Exact.md5Long(col("s")).as("h")).agg(max("h")).count())
-      time("distinct strings")(raw.distinct().count())
-      time("md5 via xxhash64")(
-        raw.select(xxhash64(col("s")).as("h")).agg(max("h")).count())
-      val sh = raw.select(col("doc_id"), Exact.md5Long(col("s")).as("s")).distinct()
-      time("hash+distinct")(sh.count())
-      val shC = sh.cache(); shC.count()
-      val a = shC.as("a"); val b = shC.as("b")
-      val inter = a.join(b, col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .agg(count(lit(1)).as("inter"))
-      time("selfjoin+agg (cached sh)")(inter.count())
-      shC.unpersist()
-      time("full jaccard")(DedupQueries.qNgramJaccard(spark, dir).count())
-      time("full jaccard capped")(DedupQueries.qNgramJaccardCapped(spark, dir).count())
-      time("full curate")(graft.ext.pipeline.CurateQueries.qCurate(spark, dir).count())
-      time("full clusters")(DedupQueries.qDedupClusters(spark, dir).count())
-      time("full curate_clustered")(graft.ext.pipeline.CurateQueries.qCurateClustered(spark, dir).count())
-      val q = graft.ext.text.TextQueries.qQuality(spark, dir)
-      time("quality")(q.count())
-      time("exact")(DedupQueries.qExact(spark, dir).count())
-      spark.stop(); return
-    }
-    // Default branch: the CURRENT text-pipeline building blocks. (The
-    // old default profiled the retired HOF-shingle formulation and its
-    // numbers were routinely misread as the production path's cost.)
-    val docs = Tables.documents(spark, dir)
-    time("norm only")(docs.select(TextNorm.norm(col("text")).as("n")).filter(length(col("n")) >= 0).count())
-    time("toks only")(docs.select(size(TextNorm.toks(col("text"))).as("n")).agg(sum("n")).count())
-    val raw = graft.ext.dedup.DedupQueries.shingleRows(spark, dir, dedup = false)
-    time("shingleRows (slice+zip)")(raw.count())
-    time("shingleRows + md5Long")(
-      raw.select(Exact.md5Long(col("s")).as("h")).agg(max("h")).count())
-    time("shingleRows deduped")(
-      graft.ext.dedup.DedupQueries.shingleRows(spark, dir).count())
-    spark.stop()
   }
 }

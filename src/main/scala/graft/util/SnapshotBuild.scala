@@ -16,8 +16,8 @@ import scala.concurrent.duration.Duration
  * the former sequential build; only wall time changes. Per-artifact
  * seconds are each task's own elapsed time (under concurrency that
  * includes scheduler contention — attribution, not an isolated probe;
- * `graft.tools.Profile <dir> snap` remains the isolated per-artifact
- * measurement).
+ * `graft.tools.Profile <dir> snapbuild 1`, a pool of width 1, is the
+ * isolated per-artifact measurement).
  *
  * [[SnapshotCache]] is already safe under this concurrency: builds run
  * outside the map's bin locks and a losing racer's blocks are released.

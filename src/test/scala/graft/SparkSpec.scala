@@ -26,21 +26,16 @@ object SparkSpec {
   lazy val session: SparkSession = {
     val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
     System.setProperty("derby.system.home", wh)
+    // the engine's settings (graft.SparkSessions.Engine) on a fixed
+    // local[4] / 4-partition master, whatever the host's core count
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
+      .config(graft.SparkSessions.Engine)
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // mirror the engine's recommended optimizer profile (bloom injection
-      // misfires on stats-less snapshot LogicalRDDs — graft.SparkSessions)
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
       .config("spark.sql.warehouse.dir", s"$wh/warehouse")
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$wh/metastore_db;create=true")
-      .config("spark.ui.enabled", "false")
-      // the deployed `file:` filesystem (graft.SparkSessions.LocalFiles)
-      .config(graft.SparkSessions.LocalFiles)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
