@@ -1,25 +1,19 @@
 package graft
 object Bench {
 
-  /** Fresh-JVM streaming probe (VERDICT r12 #4): fork a plain `java`
-    * process — same java.home, same JVM flags (the Java-17 --add-opens
-    * set Spark needs rides in from build.sbt's fork options), same
-    * classpath — running [[graft.stream.StreamBench]]'s CLI, and lift the
-    * `detail` object off its one record line. Returns "null" on any
-    * failure (missing classpath in an exotic launcher, timeout), never
-    * throws — the bench record must not die on its own diagnostics. */
+  /** 1-min host load average, -1.0 where the platform has none. */
   private def loadAvg1(): Double =
     try math.max(java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage, -1.0)
     catch { case _: Throwable => -1.0 }
 
-  /** Policy bound for the quiet-host gates: 3.0 on this 32-core box
+  /** Policy bound for the quiet-host gate: 3.0 on this 32-core box
     * (≲10% busy), override via SPARK_GRAFT_LOAD_BOUND. */
   private def loadBound(): Double =
     sys.env.get("SPARK_GRAFT_LOAD_BOUND")
       .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(3.0)
 
-  /** Load-gate for the gated sections (VERDICT r13 #2): the gated
+  /** Load-gate for the gated contract section (VERDICT r13 #2): the gated
     * readings are the numbers BASELINE.md pins its bands on, and rounds
     * 12–13 both stamped them under host load ≥ 5.5 — bit-identical
     * semantics, 2× low throughput, a footnote instead of a fact. Wait
@@ -54,106 +48,9 @@ object Bench {
   private def policyStr(l: Double, bound: Double): String =
     if (l < 0) "null" else (l <= bound).toString
 
-  /** Fork one StreamBench child (CLI `mode`) and return its full stdout
-    * ("" on any failure — the bench record must not die on its own
-    * diagnostics). Since r17 the bench forks the `pair` mode — flagship
-    * AND join probe in one child JVM, two record lines (VERDICT r16 #6:
-    * six cold forks' JVM+session startup was the bench's biggest fixed
-    * overhead after the suite itself; now three forks carry both
-    * metrics). */
-  private def standaloneStreamFork(cpus: String, mode: Seq[String]): String =
-    try {
-      import scala.jdk.CollectionConverters._
-      val javaBin = java.nio.file.Paths
-        .get(sys.props("java.home"), "bin", "java").toString
-      val jvmArgs = java.lang.management.ManagementFactory
-        .getRuntimeMXBean.getInputArguments.asScala.toSeq
-        .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-Xrunjdwp"))
-      val cmd = Seq(javaBin) ++ jvmArgs ++
-        Seq("-cp", sys.props("java.class.path"), "graft.stream.StreamBench") ++ mode
-      val pb = new ProcessBuilder(cmd.asJava)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
-      // child stderr (Spark logs) joins ours; stdout is read for the record
-      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-      val p = pb.start()
-      val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
-      if (!p.waitFor(15, java.util.concurrent.TimeUnit.MINUTES)) {
-        p.destroyForcibly(); ""
-      } else out
-    } catch { case _: Throwable => "" }
-
-  /** Lift the `detail` object off a child's `metric` record line. */
-  private def detailOf(out: String, metric: String): String =
-    out.linesIterator
-      .find(_.contains(s""""metric":"$metric""""))
-      .flatMap { line =>
-        val k = line.indexOf("\"detail\":")
-        // the detail object runs to the record's closing brace
-        if (k >= 0 && line.endsWith("}"))
-          Some(line.substring(k + 9, line.length - 1))
-        else None
-      }.getOrElse("null")
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSessions.recommended("graft-bench")
-    // r14 (VERDICT r13 #2): the STANDALONE stream probe runs FIRST —
-    // before the 205-query batch suite has touched a byte — so its fresh
-    // child JVMs measure the streaming plan on the same clean host the
-    // isolated CLI runs see (17–19k on this tree). Probing after the
-    // batch suite read 11–13k at in-policy load: the suite's page-cache
-    // and allocator residue plus bursty hypervisor steal (historical
-    // steal jiffies on this box are material) degrade a late fork in
-    // ways 1-min loadavg cannot gate on. Three forks, best-of (the batch
-    // min-of-2 methodology for throughput: contention only ever LOWERS a
-    // reading); all readings land in the gate object for auditability.
-    val (sLoad, sWaits, sBound) = waitForQuietHost()
-    def rps(detail: String): Long =
-      "\"rows_per_sec\":(\\d+)".r.findFirstMatchIn(detail)
-        .map(_.group(1).toLong).getOrElse(-1L)
-    // Bounded spread-retry on the forks (VERDICT r15 #2: the one-shot
-    // probe gate left the next ~2 min unguarded — a burst landing AFTER
-    // the probe contaminates readings the gate object then blesses).
-    // Contention only ever LOWERS a throughput reading, so the committed
-    // number is the max; the retry exists so a burst-squashed trio doesn't
-    // under-pin the band: while the top-3 spread of EITHER metric exceeds
-    // 1.3× (one fork read 30%+ below another), re-wait for a quiet host
-    // and append a replacement fork, at most twice. ALL readings land in
-    // the gate object — discards are visible, never silent. Since r17
-    // each fork is one `pair` child carrying BOTH probes (flagship then
-    // join — the record order; VERDICT r16 #6), so a retry refreshes both
-    // metrics' reading lists together.
-    val forks = scala.collection.mutable.ArrayBuffer[String]()
-    (1 to 3).foreach(_ => forks += standaloneStreamFork(cpus, Seq("pair")))
-    def detailsFor(metric: String): Seq[String] = forks.toSeq.map(detailOf(_, metric))
-    def spreadOk(metric: String): Boolean = {
-      val top = detailsFor(metric).map(rps).filter(_ > 0).sorted.takeRight(3)
-      top.size < 2 || top.max.toDouble / math.max(top.min, 1L) <= 1.3
-    }
-    var pairRetries = 0
-    while ((!spreadOk("stream_rows_per_sec") ||
-        !spreadOk("stream_join_rows_per_sec")) && pairRetries < 2) {
-      waitForQuietHost()
-      forks += standaloneStreamFork(cpus, Seq("pair"))
-      pairRetries += 1
-    }
-    val standaloneDetails = detailsFor("stream_rows_per_sec")
-    val streamStandalone = standaloneDetails.maxBy(rps)
-    val standaloneRps = standaloneDetails.map(rps)
-    // stream-stream attribution join (VERDICT r14 #3): same gate window,
-    // same fork + best-of policy — rows/s, watermark-gated outer
-    // emissions, and a state_curve that must plateau (the eviction proof
-    // StreamJoinSpec makes, with a number)
-    val joinDetails = detailsFor("stream_join_rows_per_sec")
-    val joinStandalone = joinDetails.maxBy(rps)
-    val joinRps = joinDetails.map(rps)
-    val gateFull =
-      s"""{"probe_load":${fmt2(sLoad)},"bound":$sBound,"waits":$sWaits,""" +
-        s""""in_policy":${policyStr(sLoad, sBound)},""" +
-        s""""readings":${standaloneRps.mkString("[", ",", "]")},""" +
-        s""""join_readings":${joinRps.mkString("[", ",", "]")},""" +
-        s""""retries":$pairRetries}"""
     // Steady-state methodology: one untimed warm pass over every query
     // (JIT + whole-stage-codegen compilation + parquet footers), then the
     // timed pass in fixed name order. Wide plans cost seconds of one-time
@@ -201,12 +98,10 @@ object Bench {
       }
       (entries, snapDetail)
     }
-    // --- Gated contract record (VERDICT r14 #1: the stream probe's
-    // gate + best-of discipline, applied to the OTHER headline number).
-    // The 40-query BASELINE.md contract subset runs FIRST — before the
-    // full suite has fragmented the heap — as a load-gated, probe-first,
-    // best-of-3 section: wait for a quiet host (the forks above load the
-    // box; the gate absorbs their decay), two untimed warm passes, then
+    // --- Gated contract record (VERDICT r14 #1): the 40-query
+    // BASELINE.md contract subset runs FIRST — before the full suite has
+    // fragmented the heap — as a load-gated, probe-first, best-of-3
+    // section: wait for a quiet host, two untimed warm passes, then
     // three timed passes with the per-query minimum as the committed
     // reading. The gate object (probe load, waits, in_policy, per-pass
     // totals) makes the record self-interpreting — a contended reading
@@ -340,29 +235,6 @@ object Bench {
     val total = results.collect { case (_, s) if s >= 0 => s }.sum
     val failed = results.collect { case (k, s) if s < 0 => "\"" + k + "\"" }
       .mkString("[", ",", "]")
-    // Streaming-throughput record (reference flagship plan, fixed load):
-    // its OWN field, not a queries entry — rows/s is not seconds, and the
-    // batch total must stay apples-to-apples across rounds. Release the
-    // persisted snapshot artifacts FIRST: the probe must measure the
-    // streaming plan, not the streaming plan competing with ~GBs of
-    // checkpointed batch state for executor memory (VERDICT r8: the 2.3×
-    // probe regression appeared exactly when the artifact count grew 3→7).
-    // A small warm probe next: the batch warm pass compiles none of the
-    // streaming plan.
-    val streamInBench =
-      try { graft.ext.dedup.DedupQueries.clearSnapshots()
-            spark.sqlContext.clearCache()
-            graft.stream.StreamBench.probe(spark, 60000L, 3)
-            graft.stream.StreamBench.probe(spark).json }
-      catch { case _: Throwable => "null" }
-    // r13 (VERDICT r12 #4): the in-bench probe runs inside a JVM that just
-    // executed 200+ queries (heap fragmentation, GC history, driver-machine
-    // load from the run itself), which made its reading swing 2× across
-    // rounds with identical semantics. The number BASELINE.md pins its
-    // band on is the STANDALONE best-of-3 taken at the TOP of this main
-    // (fresh child JVMs on a pre-suite host — r14); the in-bench reading
-    // stays for continuity and as the contention canary.
-    val stream = s"""{"in_bench":$streamInBench,"standalone":$streamStandalone,"join":$joinStandalone,"standalone_gate":$gateFull}"""
     // r13 (VERDICT r12 #8): driver-vs-builder totals on the identical tree
     // differed 14% with no code change — record the host pressure so the
     // next verdict can separate plan movement from machine contention.
@@ -407,7 +279,7 @@ object Bench {
     // passes SPARK_GRAFT_BENCH_WRITER through; the builder's quiet runs
     // export =builder) — an unattributed record is a driver/CI run.
     val writer = sys.env.getOrElse("SPARK_GRAFT_BENCH_WRITER", "unattributed")
-    val record = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","writer":"$writer","failed":$failed,"flaky":$flaky,"contract":$contract,"stream":$stream,"load":$load,"snapshot_detail":$snapDetail,"queries":$qs,"sf":"$sfDir"}"""
+    val record = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","writer":"$writer","failed":$failed,"flaky":$flaky,"contract":$contract,"load":$load,"snapshot_detail":$snapDetail,"queries":$qs,"sf":"$sfDir"}"""
     // Full 167-entry record → per-run scratch target/bench_full.json (and
     // the committed BENCH_LOCAL.json below at the artifact's scale).
     try {
@@ -436,13 +308,13 @@ object Bench {
     // was correct — the line's HEAD fell outside the window, so no JSON
     // parsed. A 5 KB single line would front-truncate even through
     // bench.sh's clean stdout. The compact line pins the contract surface
-    // (suite total, failures, the GATED contract total/readings/gate, the
-    // stream probes) in ~1.4 KB, guaranteed inside the driver's 2000-char
-    // tail window — NO per-query map rides it (VERDICT r15 #1: the
-    // duplicated 41-entry maps grew the line to ~2.8 KB and BENCH_r15
-    // front-truncated to "parsed": null). Per-query numbers live in the
-    // committed BENCH_LOCAL.json (and per-run in target/bench_full.json).
-    val compact = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","writer":"$writer","n_queries":${results.size},"failed":$failed,"flaky":$flaky,"contract":$contractSlim,"stream":$stream,"load":$load,"full_record":"BENCH_LOCAL.json","sf":"$sfDir"}"""
+    // (suite total, failures, the GATED contract total/readings/gate) in
+    // ~1 KB, guaranteed inside the driver's 2000-char tail window — NO
+    // per-query map rides it (VERDICT r15 #1: the duplicated 41-entry
+    // maps grew the line to ~2.8 KB and BENCH_r15 front-truncated to
+    // "parsed": null). Per-query numbers live in the committed
+    // BENCH_LOCAL.json (and per-run in target/bench_full.json).
+    val compact = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","writer":"$writer","n_queries":${results.size},"failed":$failed,"flaky":$flaky,"contract":$contractSlim,"load":$load,"full_record":"BENCH_LOCAL.json","sf":"$sfDir"}"""
     // TWO fixed paths for the compact record: tools/bench.sh emits
     // bench_last.json as its one stdout line; bench_compact.json is the
     // driver-facing artifact (VERDICT r11 ask #5 — BENCH_r11 still had

@@ -6,7 +6,7 @@ import graft.util.{NioLocalFileSystem, NioLocalFs}
 
 /**
  * The one session recipe of this engine. Every entry point (Verify, Bench,
- * StreamRunner, DailyBatch, CurateRunner, StreamBench, Explain, Profile)
+ * StreamRunner, DailyBatch, CurateRunner, Explain, Profile)
  * builds its session through [[recommended]], so they all plan and compute
  * under the same [[Engine]] settings; the test session (`SparkSpec`) layers
  * its fixed master and warehouse over the same [[Engine]] map.

@@ -78,11 +78,11 @@ object DailyBatch {
 
   /** CLI: DailyBatch <factParquetDir> <runDate yyyy-MM-dd> <outDir>. */
   def main(args: Array[String]): Unit = {
-    if (args.length < 3) {
+    if (args.length != 3) {
       System.err.println("usage: DailyBatch <factParquetDir> <runDate yyyy-MM-dd> <outDir>")
       sys.exit(2)
     }
-    val Array(factDir, runDate, outDir) = args.take(3)
+    val Array(factDir, runDate, outDir) = args
     val spark = graft.SparkSessions.recommended("graft-daily-batch")
     val n = run(spark, factDir, runDate, outDir)
     println(s"row_count=$n")

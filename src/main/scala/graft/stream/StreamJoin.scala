@@ -39,8 +39,7 @@ import org.apache.spark.sql.functions._
 object StreamJoin {
 
   /** Attribution window: a purchase credits the most recent click no
-    * older than this many seconds (fixture-sized; production would pass
-    * its own). */
+    * older than this many seconds (fixture-sized). */
   val WindowSeconds = 1800L
 
   /** Watermark delay on both sides (how late a row may arrive and still
@@ -53,15 +52,13 @@ object StreamJoin {
     * [[WindowSeconds]]. Works identically on batch frames (the spec's
     * batch-twin gate) and on streaming frames (where the watermarks bound
     * both state stores). */
-  def attribution(clicks: DataFrame, purchases: DataFrame,
-                  windowSeconds: Long = WindowSeconds,
-                  delaySeconds: Long = DelaySeconds): DataFrame = {
-    val c = clicks.withWatermark("click_ts", s"$delaySeconds seconds")
-    val p = purchases.withWatermark("purchase_ts", s"$delaySeconds seconds")
+  def attribution(clicks: DataFrame, purchases: DataFrame): DataFrame = {
+    val c = clicks.withWatermark("click_ts", s"$DelaySeconds seconds")
+    val p = purchases.withWatermark("purchase_ts", s"$DelaySeconds seconds")
     c.join(p,
       c("user_id") === p("user_id") &&
         p("purchase_ts") >= c("click_ts") &&
-        p("purchase_ts") <= c("click_ts") + expr(s"INTERVAL $windowSeconds SECONDS"),
+        p("purchase_ts") <= c("click_ts") + expr(s"INTERVAL $WindowSeconds SECONDS"),
       "inner")
       .select(c("user_id"), col("click_id"), col("click_ts"),
         col("purchase_id"), col("purchase_ts"), col("amount"))
@@ -69,21 +66,16 @@ object StreamJoin {
 
   /** LEFT OUTER variant: every click appears — matched rows as in
     * [[attribution]], unmatched clicks with null purchase columns emitted
-    * once the purchase-side watermark passes `click_ts + windowSeconds`
+    * once the purchase-side watermark passes `click_ts` + [[WindowSeconds]]
     * (the earliest moment "no match" is provable). The funnel-analysis
-    * shape: conversion AND abandonment from one operator. The window and
-    * delay default to the module constants; [[graft.stream.StreamBench]]'s
-    * `join2x` probe doubles both to pin that join state scales with
-    * windows-in-flight, not corpus size. */
-  def attributionOuter(clicks: DataFrame, purchases: DataFrame,
-                       windowSeconds: Long = WindowSeconds,
-                       delaySeconds: Long = DelaySeconds): DataFrame = {
-    val c = clicks.withWatermark("click_ts", s"$delaySeconds seconds")
-    val p = purchases.withWatermark("purchase_ts", s"$delaySeconds seconds")
+    * shape: conversion AND abandonment from one operator. */
+  def attributionOuter(clicks: DataFrame, purchases: DataFrame): DataFrame = {
+    val c = clicks.withWatermark("click_ts", s"$DelaySeconds seconds")
+    val p = purchases.withWatermark("purchase_ts", s"$DelaySeconds seconds")
     c.join(p,
       c("user_id") === p("user_id") &&
         p("purchase_ts") >= c("click_ts") &&
-        p("purchase_ts") <= c("click_ts") + expr(s"INTERVAL $windowSeconds SECONDS"),
+        p("purchase_ts") <= c("click_ts") + expr(s"INTERVAL $WindowSeconds SECONDS"),
       "leftOuter")
       .select(c("user_id").as("user_id"), col("click_id"), col("click_ts"),
         col("purchase_id"), col("purchase_ts"), col("amount"))

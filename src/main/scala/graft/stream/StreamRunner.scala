@@ -15,11 +15,11 @@ import org.apache.spark.sql.streaming.Trigger
  */
 object StreamRunner {
   def main(args: Array[String]): Unit = {
-    if (args.length < 3) {
+    if (args.length != 3) {
       System.err.println("usage: StreamRunner <inputJsonDir> <outputParquetDir> <checkpointDir>")
       sys.exit(2)
     }
-    val Array(inDir, outDir, chkDir) = args.take(3)
+    val Array(inDir, outDir, chkDir) = args
     val spark = graft.SparkSessions.recommended("graft-stream", streaming = true)
 
     val out = StreamPipeline.plan(spark,

@@ -385,9 +385,9 @@ object Explain {
         materialize = false)))
 
   def main(args: Array[String]): Unit = {
-    // --dump arg validation BEFORE the session builds (ADVICE r16): a
-    // short arg list or a typo'd query name must print usage, not throw a
-    // raw IndexOutOfBounds/NoSuchElement after ~30 s of Spark startup
+    // arg validation BEFORE the session builds (ADVICE r16): a short arg
+    // list or a typo'd query name must print usage, not throw a raw
+    // IndexOutOfBounds/NoSuchElement after ~30 s of Spark startup
     if (args.headOption.contains("--dump") || args.headOption.contains("--dumpexec")) {
       require(args.length >= 5,
         "usage: Explain --dump|--dumpexec <outDir> <suffix> <sfDir> <name...>")
@@ -396,6 +396,10 @@ object Explain {
       require(unknown.isEmpty,
         s"unknown queries: ${unknown.mkString(", ")} — names come from " +
           "SparkEntry.queries/specOnly")
+    } else if (!args.headOption.contains("--audit")) {
+      val name = args.headOption.getOrElse("q1_pricing")
+      require(graft.SparkEntry.queries.contains(name),
+        s"unknown query: $name — names come from SparkEntry.queries")
     }
     val spark = graft.SparkSessions.recommended("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
@@ -457,6 +461,7 @@ object Explain {
         println(s"dumped $name")
       }
     } else {
+      // (name validated before the session built — top of main)
       val name = args.headOption.getOrElse("q1_pricing")
       val dir = args.lift(1).getOrElse("/root/testdata/sf0.01")
       graft.SparkEntry.queries(name)(spark, dir).explain("formatted")

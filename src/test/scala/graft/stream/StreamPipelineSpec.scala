@@ -439,48 +439,6 @@ class StreamPipelineSpec extends SparkSpec {
     assert(w != null)
   }
 
-  test("stream bench probe: positive throughput, bounded state, windows emitted") {
-    val partsBefore = spark.conf.get("spark.sql.shuffle.partitions")
-    val r = StreamBench.probe(spark, nEvents = 9000L, nBatches = 3)
-    // the probe pins its own shuffle-partition count (constant-config
-    // cross-round series) and must restore the session's setting
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == partsBefore,
-      "probe leaked its pinned shuffle-partition conf into the session")
-    assert(r.rows == 9000L)
-    assert(r.rowsPerSec > 0 && r.elapsedSec > 0)
-    assert(r.outRows > 0, "no closed windows emitted — watermark never advanced?")
-    // the whole point of the probe: state is steady-state bounded, not
-    // accumulating one row per input event (dedup evicts, windows close)
-    assert(r.stateRows > 0 && r.stateRows < r.rows,
-      s"state ${r.stateRows} not bounded below input ${r.rows}")
-    assert(r.batches >= 3)
-  }
-
-  test("large-state probe: RocksDB dedup counts first-seens, restores session confs") {
-    val before = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.streaming.stateStore.providerClass")
-      .map(k => spark.conf.getOption(k))
-    val r = StreamBench.probeLargeState(spark, nEvents = 20000L, nBatches = 4)
-    assert(Seq("spark.sql.shuffle.partitions",
-      "spark.sql.streaming.stateStore.providerClass")
-      .map(k => spark.conf.getOption(k)) == before,
-      "probe leaked a pinned conf (provider/partitions) into the session")
-    assert(r.rows == 20000L && r.rowsPerSec > 0)
-    // ttl = None retains every first-seen id: state rows == emitted rows,
-    // and every 10th event was an (eventual) duplicate, so out < in
-    assert(r.stateRows == r.outRows, s"state ${r.stateRows} != out ${r.outRows}")
-    assert(r.outRows < r.rows && r.outRows > (r.rows * 85) / 100)
-    assert(r.batchRps.length == 4 && r.batchRps.forall(_ > 0))
-  }
-
-  test("MV fold probe: folded view matches the batch recompute, view stays bounded") {
-    val r = StreamBench.probeMvFold(spark, nEvents = 6000L, nBatches = 4)
-    assert(r.rows == 6000L && r.batches == 4L && r.rowsPerSec > 0)
-    assert(r.matchesBatch, "folded view diverged from the one-shot recompute")
-    // state is the VIEW: day x type grain, constant in the event count
-    assert(r.viewRows <= 30L * 6L, s"view grew past its grain: ${r.viewRows}")
-  }
-
   test("kafka deploy gate: without the connector jar, source resolution fails naming kafka") {
     // executable documentation of the deploy requirement (README "Deploying
     // against Kafka"): the spark-sql-kafka-0-10 connector is NOT on this

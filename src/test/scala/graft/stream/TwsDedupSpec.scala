@@ -28,7 +28,8 @@ class TwsDedupSpec extends SparkSpec {
       val out = Files.createTempDirectory("tws_out").toString
       val chk = Files.createTempDirectory("tws_chk").toString
 
-      def runOnce(): Unit = {
+      // returns the state-store row total after the run's last batch
+      def runOnce(): Long = {
         val events = spark.readStream
           .schema("event_id STRING, event_time TIMESTAMP, amount DOUBLE")
           .json(in).as[DedupEvent]
@@ -37,6 +38,7 @@ class TwsDedupSpec extends SparkSpec {
           .option("checkpointLocation", chk)
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         assert(q.awaitTermination(180000), "query did not drain in time")
+        q.lastProgress.stateOperators.map(_.numRowsTotal).sum
       }
 
       def line(id: String, t: String, amount: Double) =
@@ -60,11 +62,14 @@ class TwsDedupSpec extends SparkSpec {
         java.util.Arrays.asList(
           line("e1", "2024-01-01T00:00:04Z", 4.0),
           line("e3", "2024-01-01T00:00:05Z", 5.0)))
-      runOnce()
+      val stateRows = runOnce()
       val after2 = spark.read.parquet(out).as[DedupEvent].collect().sortBy(_.event_id)
       assert(after2.map(_.event_id).toSeq == Seq("e1", "e2", "e3"))
       assert(after2.find(_.event_id == "e1").get.amount == 1.0,
         "the recurring e1 must not replace the original")
+      // ttl = None never evicts: the state holds exactly one row per
+      // first-seen id, and a recurring id adds none
+      assert(stateRows == 3L, s"state rows $stateRows, want one per first-seen id")
     }
   }
 

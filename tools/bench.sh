@@ -1,8 +1,8 @@
 #!/usr/bin/env bash
 # Bench wrapper for the round driver: every byte of sbt/Spark noise goes to
 # stderr; stdout carries EXACTLY ONE line — the COMPACT JSON bench record
-# (suite total, failures, the gated contract total/readings/gate, stream
-# probes; ~1.4 KB with NO per-query map, guaranteed inside the driver's
+# (suite total, failures, the gated contract total/readings/gate; ~1 KB
+# with NO per-query map, guaranteed inside the driver's
 # 2000-char tail-capture window — the r15 line that embedded two 41-entry
 # query maps front-truncated to "parsed": null, as did the bare
 # `sbt 'runMain graft.Bench'` framing in rounds 8–10). The FULL record
