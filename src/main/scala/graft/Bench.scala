@@ -49,6 +49,12 @@ object Bench {
     if (l < 0) "null" else (l <= bound).toString
 
   def main(args: Array[String]): Unit = {
+    // the corpus comes from the environment only; an argument would be
+    // silently ignored, so any is refused before the session builds
+    if (args.nonEmpty) {
+      System.err.println("usage: [SPARK_GRAFT_SF_DIR=<sfDir>] Bench (no arguments)")
+      sys.exit(2)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = SparkSessions.recommended("graft-bench")
     // Steady-state methodology: one untimed warm pass over every query
@@ -62,25 +68,18 @@ object Bench {
     // DuckDB gate by design, not the clock. Without them the BASELINE.md
     // contract query q_approx_distinct had no bench row since round 6.
     val ordered = (SparkEntry.queries ++ SparkEntry.specOnly).toSeq.sortBy(_._1)
-    // Each timed pass: reset the suite-scoped pair snapshots and time the
-    // rebuild as ONE attributable pseudo-entry so the shared
-    // scan→shingle→posting pipeline cost is under the clock instead of
-    // landing on whichever consumer happens to run first. Consumers then
-    // measure post-snapshot work — the production shape, where the pair
-    // snapshot is a persisted artifact built once per corpus version.
-    // buildSnapshots also returns per-artifact seconds so a regression in
-    // one index is attributable without bisecting the aggregate.
-    // `names` restricts the pass to a query subset (the contract section);
-    // null = every registered query.
+    // Each timed pass: reset the suite-scoped snapshots and time their
+    // rebuild as ONE attributable pseudo-entry, so the shared pipelines'
+    // cost is under the clock instead of landing on whichever consumer
+    // runs first. Consumers then measure post-snapshot work — the
+    // production shape, where a snapshot is a persisted artifact built
+    // once per corpus version. SnapshotBuild.all also returns
+    // per-artifact seconds (`snapshot_detail`). `names` restricts the pass
+    // to a query subset (the contract section); null = every registered
+    // query.
     def timedPass(names: Set[String] = null): (Seq[(String, Double)], Seq[(String, Double)]) = {
-      graft.ext.dedup.DedupQueries.clearSnapshots()
+      graft.util.SnapshotCache.clearAll()
       val snapT0 = System.nanoTime()
-      // r13 (VERDICT r12 #3): the artifacts build CONCURRENTLY — they
-      // are independent (the tokenizer→tokenized-corpus chain stays
-      // sequential inside its task), and a single artifact's stages left
-      // most of local[32] idle. Same artifacts, cache keys, and
-      // snapshot_detail names as the former sequential build; snapSecs is
-      // the wall time of the parallel section.
       val (snapSecs, snapDetail) =
         try { val d = graft.util.SnapshotBuild.all(spark, sfDir)
               ((System.nanoTime() - snapT0) / 1e9, d) }

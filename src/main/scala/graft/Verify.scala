@@ -3,12 +3,27 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  private val Usage = "usage: Verify <sfDir> <outDir> [queryNameRegex]"
+
   def main(args: Array[String]): Unit = {
-    val (sfDir, outDir) = (args(0), args(1))
     // optional third arg (local iteration only; the driver passes two): a
-    // regex — only matching query names are dumped and oracled
+    // regex — only matching query names are dumped and oracled. Checked
+    // before the session builds: a regex matching nothing would otherwise
+    // write an empty oracle_sql.json and look like a clean run.
     val nameFilter: String => Boolean =
       args.lift(2).map(p => (s: String) => s.matches(p)).getOrElse(_ => true)
+    val problem =
+      if (args.length != 2 && args.length != 3) Some(Usage)
+      else args.lift(2).flatMap { p =>
+        if (scala.util.Try(java.util.regex.Pattern.compile(p)).isFailure)
+          Some(s"not a regex: $p\n$Usage")
+        else if (!SparkEntry.queries.keys.exists(nameFilter))
+          Some(s"regex matches no query: $p\n$Usage")
+        else None
+      }
+    problem.foreach { msg => System.err.println(msg); sys.exit(2) }
+    val (sfDir, outDir) = (args(0), args(1))
     val spark = SparkSessions.recommended("graft-verify")
     new java.io.File(outDir).mkdirs()
     // only emit oracle SQL for queries whose parquet actually landed — an

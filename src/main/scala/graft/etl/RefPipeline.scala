@@ -25,6 +25,14 @@ import graft.model.{ProductDim, Schemas, UserDim}
  */
 object RefPipeline {
 
+  /** Sliding window length and slide of [[aggregate]]. */
+  val Window = "1 minute"
+  val Slide = "30 seconds"
+
+  /** Event-time watermark delay of the streaming pipeline (reference
+    * app.py:160): how late a row may arrive and still count. */
+  val Watermark = "30 seconds"
+
   /** P1–P3 (reference app.py:61–63): Kafka value bytes → string → JSON
     * struct → flattened columns. */
   def parse(raw: DataFrame): DataFrame =
@@ -110,18 +118,13 @@ object RefPipeline {
       FROM fact_events""")
   }
 
-  /** T1–T2 + A1–A4 (reference app.py:158–174): watermarked sliding-window
-    * aggregation. `withWatermark` is a no-op on batch inputs, so the same
-    * function serves the oracle twin and the streaming query. Pass
-    * `watermark = None` when an upstream stage (e.g. bounded dedup) already
-    * defined one — Spark 4 disallows redefining it, and one watermark
-    * correctly gates all chained stateful operators. */
-  def aggregate(fact: DataFrame,
-                window_ : String = "1 minute",
-                slide: String = "30 seconds",
-                watermark: Option[String] = Some("30 seconds")): DataFrame =
-    watermark.fold(fact)(w => fact.withWatermark("event_time", w))
-      .groupBy(window(col("event_time"), window_, slide), col("country"), col("segment"))
+  /** T1–T2 + A1–A4 (reference app.py:158–174): sliding-window aggregation.
+    * It sets no watermark: the streaming plan's [[Watermark]] is set once,
+    * before the bounded dedup, and gates every chained stateful operator
+    * (Spark 4 disallows redefining it); batch inputs need none. */
+  def aggregate(fact: DataFrame): DataFrame =
+    fact
+      .groupBy(window(col("event_time"), Window, Slide), col("country"), col("segment"))
       .agg(
         sum("amount").as("total_amount"),
         approx_count_distinct("event_id").as("unique_events"),

@@ -311,47 +311,14 @@ object DedupQueries {
     * ASSUMPTION: data under `dir` is immutable for the session's lifetime
     * (true for the driver's generated fixtures, and for production
     * snapshot paths which are content-addressed). If a dir is regenerated
-    * in-session, call [[clearSnapshots]] first or the consumers read the
-    * stale materialization. */
-  // Cache mechanics factored to graft.util.SnapshotCache (round 11) so the
-  // basket frame and future shared artifacts ride the same discipline.
-  private def releaseSnapshot(df: DataFrame): Unit =
-    graft.util.SnapshotCache.release(df)
-
-  /** Drop EVERY cached snapshot (all families, not just dedup pairs) and
-    * unpersist their blocks. For bench harnesses (put the build back under
-    * the clock) and for the regenerated-`dir` escape hatch documented on
-    * [[graft.util.SnapshotCache]]. */
-  def clearSnapshots(): Unit = graft.util.SnapshotCache.clearAll()
-
-  /** Eagerly build (or re-touch) every snapshot the registered queries
-    * share, so a bench can time the shared pipeline as ONE attributable
-    * entry instead of landing it on whichever consumer runs first.
-    * Returns per-artifact build seconds (name → sec) so a regression in a
-    * single index is visible without bisecting the aggregate (VERDICT r8
-    * ask #4). On a warm cache each timing is ~0 — the artifact is
-    * re-touched, not rebuilt. */
-  def buildSnapshots(spark: SparkSession, dir: String): Seq[(String, Double)] = {
-    def timed(name: String)(b: => Any): (String, Double) = {
-      val t0 = System.nanoTime(); b; name -> (System.nanoTime() - t0) / 1e9
-    }
-    Seq(
-      timed("shingle_rows")(shingleRowsSnapshot(spark, dir)),
-      timed("jaccard_pairs")(jaccardPairSnapshot(spark, dir)),
-      timed("emb_pairs")(embeddingPairSnapshot(spark, dir)),
-      timed("emb_lsh_pairs")(embeddingLshPairSnapshot(spark, dir)),
-      timed("span_windows")(spanWindowsSnapshot(spark, dir)),
-      timed("span_islands")(spanIslandsSnapshot(spark, dir)),
-      timed("inc_corpus_index")(corpusIndex(spark, dir)),
-      timed("span_corpus_index")(spanCorpusIndex(spark, dir)),
-      timed("emb_inc_index")(embIncCorpusIndex(spark, dir)),
-      timed("inc_exact_hashes")(corpusHashIndex(spark, dir)),
-      timed("inc_doc_hashes")(corpusDocHashes(spark, dir)))
-  }
-
+    * in-session, call [[graft.util.SnapshotCache.clearAll]] first or the
+    * consumers read the stale materialization. */
   private def snapshot(tag: String, spark: SparkSession, dir: String)
                       (build: => DataFrame): DataFrame =
     graft.util.SnapshotCache.snapshot(tag, spark, dir)(build)
+
+  private def releaseSnapshot(df: DataFrame): Unit =
+    graft.util.SnapshotCache.release(df)
 
   // builds from the shared shingle materialization (r16) — same kernel,
   // same values as qNgramJaccard (the live oracle form); only the shingle

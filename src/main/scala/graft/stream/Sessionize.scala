@@ -40,13 +40,17 @@ case class SessionBuf(start: Long, last: Long, n: Long, total: Double)
  */
 object Sessionize {
 
-  /** @param gapSeconds session closes after this much event-time silence */
-  def apply(events: Dataset[SessionEvent], gapSeconds: Long,
-            watermark: String = "30 seconds"): Dataset[UserSession] = {
+  /** A session closes after this much event-time silence. */
+  val GapSeconds = 60L
+
+  /** Watermark delay: how late an event may arrive and still attach. */
+  val Watermark = "30 seconds"
+
+  def apply(events: Dataset[SessionEvent]): Dataset[UserSession] = {
     implicit val outEnc: Encoder[UserSession] = Encoders.product[UserSession]
     implicit val stateEnc: Encoder[Seq[SessionBuf]] = ExpressionEncoder[Seq[SessionBuf]]()
     implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    val gapMs = gapSeconds * 1000L
+    val gapMs = GapSeconds * 1000L
 
     // coalesce sorted sessions whose gaps closed (an event can bridge two)
     def mergeAdjacent(sorted: List[SessionBuf]): List[SessionBuf] =
@@ -58,7 +62,7 @@ object Sessionize {
       }.reverse
 
     events
-      .withWatermark("event_time", watermark)
+      .withWatermark("event_time", Watermark)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[Seq[SessionBuf], UserSession](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {

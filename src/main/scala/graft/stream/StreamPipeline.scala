@@ -100,22 +100,19 @@ object StreamPipeline {
   /** Streaming clean: the batch twin's [[RefPipeline.scalarClean]], but the
     * dedup is `dropDuplicatesWithinWatermark` AFTER the watermark, so state
     * for an event_id is dropped once the watermark passes it. */
-  def cleanStream(parsed: DataFrame, watermark: String = "30 seconds"): DataFrame =
+  def cleanStream(parsed: DataFrame): DataFrame =
     RefPipeline.scalarClean(parsed)
-      .withWatermark("event_time", watermark)
+      .withWatermark("event_time", RefPipeline.Watermark)
       .dropDuplicatesWithinWatermark("event_id")
 
   /** Full streaming plan: the same stage functions as the batch twin —
     * parse (P1–P3), clean, enrich (J1–J3), aggregate (T1/T2, A1–A4),
-    * flatten (P11/P12, T8). */
-  def plan(spark: SparkSession, raw: DataFrame,
-           window_ : String = "1 minute", slide: String = "30 seconds",
-           watermark: String = "30 seconds"): DataFrame = {
-    val fact = RefPipeline.enrich(
-      cleanStream(RefPipeline.parse(raw), watermark),
+    * flatten (P11/P12, T8). The watermark set before the dedup propagates
+    * through the joins to the aggregate. */
+  def plan(spark: SparkSession, raw: DataFrame): DataFrame = {
+    val fact = RefPipeline.enrich(cleanStream(RefPipeline.parse(raw)),
       RefPipeline.usersDim(spark), RefPipeline.productsDim(spark))
-    // watermark already set before dedup; it propagates through the joins
-    RefPipeline.flatten(RefPipeline.aggregate(fact, window_, slide, watermark = None))
+    RefPipeline.flatten(RefPipeline.aggregate(fact))
   }
 
   // ---------------------------------------------------------------- sinks
@@ -182,14 +179,16 @@ object StreamPipeline {
 
   def start(df: DataFrame, sink: Sink): StreamingQuery = writer(df, sink).start()
 
-  /** T7 (reference app.py:189–209): one plan fanned out to several
-    * concurrent sinks; caller awaits via spark.streams. */
-  def fanOut(df: DataFrame, sinks: Seq[Sink]): Seq[StreamingQuery] =
-    sinks.map(start(df, _))
+  /** Watermark delay on both sides of [[joinStreams]]. */
+  val JoinWatermark = "30 seconds"
+
+  /** [[joinStreams]] pairs an event with profile updates at most this many
+    * seconds older. */
+  val JoinIntervalSeconds = 60L
 
   /** Stream-stream interval join (beyond the reference's stream⋈static
     * joins): each event pairs with EVERY profile update in the preceding
-    * `intervalSeconds` (a plain interval join — events duplicate when
+    * [[JoinIntervalSeconds]] (a plain interval join — events duplicate when
     * several updates fall in the window; reducing to the single latest
     * match is a downstream dedup the caller owns, since append-mode
     * stream-stream joins cannot self-prune). Both sides carry watermarks,
@@ -198,14 +197,12 @@ object StreamPipeline {
     *
     * Inputs: events(user_id, event_time, …), profiles(p_user_id,
     * update_time, …). */
-  def joinStreams(events: DataFrame, profiles: DataFrame,
-                  watermark: String = "30 seconds",
-                  intervalSeconds: Long = 60): DataFrame =
-    events.withWatermark("event_time", watermark)
+  def joinStreams(events: DataFrame, profiles: DataFrame): DataFrame =
+    events.withWatermark("event_time", JoinWatermark)
       .join(
-        profiles.withWatermark("update_time", watermark),
+        profiles.withWatermark("update_time", JoinWatermark),
         expr(s"""
           user_id = p_user_id AND
           update_time <= event_time AND
-          update_time >= event_time - INTERVAL $intervalSeconds SECONDS"""))
+          update_time >= event_time - INTERVAL $JoinIntervalSeconds SECONDS"""))
 }

@@ -1,5 +1,7 @@
 package graft.tools
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
@@ -14,6 +16,10 @@ object Profile {
 
   private val Usage =
     "usage: Profile <sfDir> scalepin [record] | snapbuild [widths...] | q <names...>"
+
+  /** The `scalepin` gate's pins, read and written relative to the
+    * working directory (the repository root under sbt). */
+  private val PinPath = Paths.get("SCALING_PINS.json")
 
   /** The 10× fixture family of the `scalepin` gate (first built for the
     * scale14 probe, SCALING.md): documents ×10 content-salted (near
@@ -124,6 +130,18 @@ object Profile {
       case _ => Some(Usage)
     }
     problem.foreach { msg => System.err.println(msg); sys.exit(2) }
+    if (args(1) == "scalepin" && rest.isEmpty && Files.exists(PinPath)) {
+      // a growth ratio measured on other cores is not comparable to a pin
+      val here = Runtime.getRuntime.availableProcessors
+      val pinned = """^\s*"cores":\s*(\d+),?\s*$""".r
+      val cores = new String(Files.readAllBytes(PinPath), "UTF-8").linesIterator
+        .collectFirst { case pinned(n) => n.toInt }
+      if (!cores.contains(here)) {
+        println(s"scalepin NOT COMPARABLE: pins recorded on ${cores.getOrElse("unrecorded")} " +
+          s"cores, this host has $here")
+        sys.exit(3)
+      }
+    }
     val dir = args(0)
     val spark = graft.SparkSessions.recommended("graft-profile")
     val ok = args(1) match {
@@ -173,14 +191,15 @@ object Profile {
     * committed SCALING_PINS.json; a ratio degraded by more than `PinSlack`
     * fails with a diff (returns false: exit 2). The pins were recorded at
     * sf0.1 on 32 cores; `SPARK_GRAFT_CPUS=32` reproduces that session
-    * (local[32], 32 shuffle partitions). Regenerate the pin file after an
-    * INTENDED plan change:
+    * (local[32], 32 shuffle partitions). `record` writes the host's core
+    * count into the file, and a check on any other core count prints
+    * `scalepin NOT COMPARABLE` and exits 3 before building a fixture.
+    * Regenerate the pin file after an INTENDED plan change:
     *   SPARK_GRAFT_CPUS=32 sbt 'runMain graft.tools.Profile <sf0.1> scalepin record'
     * Per-reading noise policy: best-of-2 timed runs per point (the bench
     * minimum methodology), warm pass first. */
   private def scalePin(spark: SparkSession, dir: String, record: Boolean): Boolean = {
     val PinSlack = 1.5
-    val pinPath = java.nio.file.Paths.get("SCALING_PINS.json")
     val (docsDir, liDir, evDir) =
       scale14Fixtures(spark, dir, "/tmp/graft_scalepin")
     val fixtureDir = Map("docs" -> docsDir, "li" -> liDir, "ev" -> evDir,
@@ -207,19 +226,20 @@ object Profile {
       }
     def fmt(v: Double) = f"$v%.3f"
     if (record) {
-      val body = measured.map { case (n, (b, x, g)) =>
-        s"""  "$n": {"base_sec": ${fmt(b)}, "x10_sec": ${fmt(x)}, "growth": ${fmt(g)}}"""
-      }.mkString("{\n", ",\n", "\n}\n")
-      java.nio.file.Files.write(pinPath, body.getBytes("UTF-8"))
-      println(s"scalepin recorded ${measured.size} pins -> $pinPath")
+      val body = (s"""  "cores": ${Runtime.getRuntime.availableProcessors}""" +:
+        measured.map { case (n, (b, x, g)) =>
+          s"""  "$n": {"base_sec": ${fmt(b)}, "x10_sec": ${fmt(x)}, "growth": ${fmt(g)}}"""
+        }).mkString("{\n", ",\n", "\n}\n")
+      Files.write(PinPath, body.getBytes("UTF-8"))
+      println(s"scalepin recorded ${measured.size} pins -> $PinPath")
       true
     } else {
-      require(java.nio.file.Files.exists(pinPath),
-        s"missing $pinPath; record it first with Profile <dir> scalepin record")
+      require(Files.exists(PinPath),
+        s"missing $PinPath; record it first with Profile <dir> scalepin record")
       val Entry =
         ("""^\s*"([^"]+)":\s*\{"base_sec":\s*([0-9.]+),\s*"x10_sec":\s*""" +
           """([0-9.]+),\s*"growth":\s*([0-9.]+)\}.*$""").r
-      val pins = new String(java.nio.file.Files.readAllBytes(pinPath), "UTF-8")
+      val pins = new String(Files.readAllBytes(PinPath), "UTF-8")
         .linesIterator.collect {
           case Entry(k, b, x, g) => k -> (b.toDouble, x.toDouble, g.toDouble)
         }.toMap

@@ -67,40 +67,15 @@ object SnapshotCache {
       }
     }
 
-  /** Intermediate BUILD checkpoints (frames a builder materializes for
-    * its own internal reuse, not cache entries themselves) — registered
-    * so [[clearAll]] frees their blocks alongside the snapshots'. Without
-    * this a builder's internal localCheckpoint (the dsir feature stream)
-    * would pin its blocks forever: clearAll only walks snapshot frames,
-    * and the builder plan kept in [[builtPlans]] holds the leaf RDD. */
-  private val scratch =
-    new java.util.concurrent.ConcurrentLinkedQueue[(SparkSession, DataFrame)]()
-
-  /** Checkpoint an intermediate frame inside a snapshot BUILD, with its
-    * blocks released at the next [[clearAll]] — the same lifecycle as the
-    * snapshot the build feeds. Tier follows [[ReliableConf]] like the
-    * snapshots themselves. */
-  def scratchCheckpoint(spark: SparkSession, df: DataFrame): DataFrame = {
-    val c = materialize(spark, df)
-    scratch.add((spark, c))
-    c
-  }
-
-  /** Drop every cached snapshot and unpersist its blocks (scratch build
-    * checkpoints included). For bench harnesses (put the build back under
-    * the clock) and for the regenerated-`dir` escape hatch documented
-    * above. */
+  /** Drop every cached snapshot and unpersist its blocks. For bench
+    * harnesses (put the build back under the clock) and for the
+    * regenerated-`dir` escape hatch documented above. */
   def clearAll(): Unit = {
     val it = snapshots.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
       if (!e.getKey._1.sparkContext.isStopped) release(e.getValue)
       it.remove()
-    }
-    var s = scratch.poll()
-    while (s != null) {
-      if (!s._1.sparkContext.isStopped) release(s._2)
-      s = scratch.poll()
     }
   }
 

@@ -14,16 +14,16 @@ class ExtensionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("pair snapshot cache: same-key reuse, clearSnapshots releases blocks and rebuilds") {
-    DedupQueries.clearSnapshots()
+    graft.util.SnapshotCache.clearAll()
     val a = DedupQueries.jaccardPairSnapshot(spark, sf)
     val nA = a.count()
     // second touch with the same (session, dir, partitions) key reuses
     assert(DedupQueries.jaccardPairSnapshot(spark, sf) eq a)
     val persistedWith = spark.sparkContext.getPersistentRDDs.size
-    DedupQueries.clearSnapshots()
+    graft.util.SnapshotCache.clearAll()
     // the checkpointed blocks behind the snapshot are actually unpersisted
     assert(spark.sparkContext.getPersistentRDDs.size < persistedWith,
-      "clearSnapshots left the checkpointed RDD persisted")
+      "clearAll left the checkpointed RDD persisted")
     // next touch REBUILDS (fresh frame, same content)
     val b = DedupQueries.jaccardPairSnapshot(spark, sf)
     assert(!(b eq a))

@@ -18,7 +18,7 @@ class SessionizeSpec extends SparkSpec {
   test("sessions split on gap and emit once the watermark passes the deadline") {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[SessionEvent]
-    val out = Sessionize(ms.toDS(), gapSeconds = 60)
+    val out = Sessionize(ms.toDS())
     val q = StreamPipeline.start(out.toDF(),
       StreamPipeline.Memory("sessions", trigger = Trigger.ProcessingTime(0L)))
 
@@ -75,7 +75,7 @@ class SessionizeSpec extends SparkSpec {
 
     // streaming: same rows + a far-future flush event per user
     val ms = MemoryStream[SessionEvent]
-    val q = StreamPipeline.start(Sessionize(ms.toDS(), gapSeconds = 60).toDF(),
+    val q = StreamPipeline.start(Sessionize(ms.toDS()).toDF(),
       StreamPipeline.Memory("sess_twin", trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L)))
     ms.addData(events: _*)
     q.processAllAvailable()
@@ -92,7 +92,7 @@ class SessionizeSpec extends SparkSpec {
   test("mid-batch gap closes a session only once the watermark passes its deadline") {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[SessionEvent]
-    val out = Sessionize(ms.toDS(), gapSeconds = 60)
+    val out = Sessionize(ms.toDS())
     val q = StreamPipeline.start(out.toDF(),
       StreamPipeline.Memory("sessions2", trigger = Trigger.ProcessingTime(0L)))
     // gap inside the batch: the 00:10 event advances the watermark to
@@ -117,7 +117,7 @@ class SessionizeSpec extends SparkSpec {
     // it cannot withhold a boundary session when a drained stream's final
     // watermark lands exactly on the deadline.
     val ms = MemoryStream[SessionEvent]
-    val q = StreamPipeline.start(Sessionize(ms.toDS(), gapSeconds = 60).toDF(),
+    val q = StreamPipeline.start(Sessionize(ms.toDS()).toDF(),
       StreamPipeline.Memory("sessions4", trigger = Trigger.ProcessingTime(0L)))
     ms.addData(ev(7, "2024-01-01 00:00:00", 1.0))
     q.processAllAvailable()
@@ -136,7 +136,7 @@ class SessionizeSpec extends SparkSpec {
     // Part 2 — a straggler strictly above the watermark landing at EXACTLY
     // last+gap of a pending session attaches and bridges two sessions.
     val ms2 = MemoryStream[SessionEvent]
-    val q2 = StreamPipeline.start(Sessionize(ms2.toDS(), gapSeconds = 60).toDF(),
+    val q2 = StreamPipeline.start(Sessionize(ms2.toDS()).toDF(),
       StreamPipeline.Memory("sessions5", trigger = Trigger.ProcessingTime(0L)))
     ms2.addData(ev(7, "2024-01-01 00:00:00", 1.0))
     q2.processAllAvailable()
@@ -160,7 +160,7 @@ class SessionizeSpec extends SparkSpec {
   test("out-of-order within-watermark event bridges two pending sessions (min-start, merge)") {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[SessionEvent]
-    val out = Sessionize(ms.toDS(), gapSeconds = 60)
+    val out = Sessionize(ms.toDS())
     val q = StreamPipeline.start(out.toDF(),
       StreamPipeline.Memory("sessions3", trigger = Trigger.ProcessingTime(0L)))
     // batch 1: two events 70s apart → two pending sessions; watermark

@@ -61,8 +61,7 @@ class StreamPipelineSpec extends SparkSpec {
   test("dedup within watermark drops duplicate event_ids across micro-batches, state stays bounded") {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[String]
-    val cleaned = StreamPipeline.cleanStream(
-      graft.etl.RefPipeline.parse(ms.toDF()), watermark = "30 seconds")
+    val cleaned = StreamPipeline.cleanStream(graft.etl.RefPipeline.parse(ms.toDF()))
     val q = StreamPipeline.start(cleaned.select("event_id", "event_time", "amount"),
       StreamPipeline.Memory("dedup_out"))
 

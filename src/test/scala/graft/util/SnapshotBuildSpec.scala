@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /**
- * Hash-gate for the concurrent artifact build (VERDICT r12 #3's done
- * condition): [[SnapshotBuild.all]] must produce artifacts IDENTICAL to
- * the sequential build it replaced — same rows, same attribution keys —
- * with concurrency changing only wall time. Frames are digested with an
+ * Hash-gate for the concurrent artifact build: [[SnapshotBuild.all]] must
+ * produce artifacts IDENTICAL to a sequential walk of the same
+ * [[SnapshotBuild.Graph]] — same rows, same attribution keys — with
+ * concurrency changing only wall time. Frames are digested with an
  * order-independent row-hash sum so nondeterministic partition order
  * can't mask or fake a difference.
  */
@@ -59,13 +59,12 @@ class SnapshotBuildSpec extends SparkSpec {
     "kmeans_assign" -> digest(graft.ext.sim.SimQueries.kmeansModel(spark, sf)
       .select(col("vec_id"), col("nsq"), col("cl"))),
     "wmedian_grain" -> digest(graft.batch.StatsQueries.wmedianGrain(spark, sf)),
-    // r16 shared-materialization artifacts: component labels and the
+    // shared-materialization artifacts: component labels and the
     // canonical map must come out identical whether built concurrently
-    // (continuation chains) or on demand in the sequential replay
+    // (as `next` steps) or in the sequential walk
     "jaccard_clusters" -> digest(graft.ext.dedup.DedupQueries.clusterLabels(spark, sf)),
     "er_canon_map" -> digest(graft.ext.er.ErQueries.canonMap(spark, sf)),
     "curate_screen" -> digest(graft.ext.pipeline.CurateQueries.screenVerdicts(spark, sf)),
-    // r17: the semantic component-label artifacts (VERDICT r16 #1)
     "sem_clusters" -> digest(graft.ext.dedup.DedupQueries.semClusterLabels(spark, sf)),
     "sem_clusters_lsh" -> digest(graft.ext.dedup.DedupQueries.semClusterLabelsLsh(spark, sf)))
 
@@ -74,52 +73,26 @@ class SnapshotBuildSpec extends SparkSpec {
     val concurrent = SnapshotBuild.all(spark, sf)
     val concurrentDigests = sample() // cache hits — the concurrent build's frames
     SnapshotCache.clearAll()
-    // sequential rebuild: the pre-r13 shape (buildSnapshots + the singles)
-    graft.ext.dedup.DedupQueries.buildSnapshots(spark, sf)
-    graft.batch.BasketQueries.basketSnapshot(spark, sf)
-    graft.ext.text.TextQueries.lmScoreSnapshot(spark, sf)
-    graft.ext.text.TextQueries.bpeArtifacts(spark, sf)
-    graft.ext.text.TextQueries.bpeEncoded(spark, sf)
-    graft.ext.text.DsirQueries.weightFrame(spark, sf)
-    graft.ext.text.CmSketchQueries.counters(spark, sf)
-    graft.ext.sim.SimQueries.qKnnBrute(spark, sf)
-    graft.ext.sim.SimQueries.lshBandIndex(spark, sf)
-    graft.ext.sim.PqQueries.codesSnapshot(spark, sf)
-    graft.ext.sim.PqQueries.lutSnapshot(spark, sf)
-    graft.ext.sim.AlignQueries.qAlignBitext(spark, sf)
-    graft.ext.text.TextQueries.tokenizedDocs(spark, sf)
-    graft.ext.dedup.DedupQueries.signatures(spark, sf)
-    graft.ext.dedup.DedupQueries.qSimhash(spark, sf)
-    graft.ext.dedup.KMinHashQueries.sketchIndex(spark, sf)
-    graft.ext.text.TextQueries.pplArtifacts(spark, sf)
-    graft.ext.text.DsirQueries.incModel(spark, sf)
-    graft.ext.er.ErQueries.baseArtifacts(spark, sf)
-    graft.ext.sim.SimQueries.kmeansModel(spark, sf)
-    graft.batch.StatsQueries.wmedianGrain(spark, sf)
+    // sequential rebuild: the same graph, walked depth first on this thread
+    def walk(s: SnapshotBuild.Step): Unit = { s.build(spark, sf); s.next.foreach(walk) }
+    SnapshotBuild.Graph.foreach(walk)
     val sequentialDigests = sample()
     assert(concurrentDigests == sequentialDigests,
       s"concurrent vs sequential artifact content diverged:\n" +
         s"  concurrent: $concurrentDigests\n  sequential: $sequentialDigests")
-    // attribution keys are the sequential-era record keys plus the
-    // round-13 artifacts (truth anchors, signature/sketch indexes,
-    // frozen screen models, the tokenized corpus, the k-means model)
-    // plus the r16 shared-materialization entries (the cluster-label
-    // and canonical-map artifacts; ppl/dsir incrementals now ride their
-    // upstream chains as continuations), in order
+    // attribution names: every step of the graph, in its depth-first order
     assert(concurrent.map(_._1) == Seq(
       "span_windows", "span_islands", "span_corpus_index",
-      "bpe_tokenizer", "bpe_encoded",
       "shingle_rows", "jaccard_pairs", "jaccard_clusters",
-      "inc_corpus_index", "curate_screen",
-      "emb_pairs", "sem_clusters", "emb_lsh_pairs", "sem_clusters_lsh",
-      "emb_inc_index",
-      "inc_exact_hashes", "inc_doc_hashes", "baskets",
+      "minhash_sigs", "kminhash_sketches", "inc_corpus_index", "curate_screen",
       "lm_bigrams", "lm_scores", "ppl_inc_model",
-      "dsir_features", "dsir_weights", "dsir_inc_model", "cm_counters",
-      "lsh_bands", "knn_truth", "align_truth", "pq_codes", "pq_luts",
-      "doc_tokens", "minhash_sigs", "simhash_sigs", "kminhash_sketches",
-      "er_base_canon", "er_canon_map", "kmeans_assign",
-      "wmedian_grain"))
+      "dsir_features", "dsir_weights", "dsir_inc_model",
+      "emb_pairs", "sem_clusters", "emb_lsh_pairs", "sem_clusters_lsh",
+      "er_base_canon", "er_canon_map", "simhash_sigs", "kmeans_assign",
+      "bpe_tokenizer", "bpe_encoded",
+      "emb_inc_index", "inc_exact_hashes", "inc_doc_hashes", "baskets",
+      "cm_counters", "lsh_bands", "knn_truth", "align_truth",
+      "pq_codes", "pq_luts", "doc_tokens", "wmedian_grain"))
     // every build actually ran under the clock (no zero-cost phantom)
     assert(concurrent.forall(_._2 >= 0.0))
     SnapshotCache.clearAll()
