@@ -300,7 +300,7 @@ object Bench {
         java.nio.file.Files.write(p, (record + "\n").getBytes("UTF-8"))
       } catch { case _: Throwable => () }
     }
-    // stdout (and target/bench_last.json, which tools/bench.sh emits
+    // stdout (and target/bench_compact.json, which tools/bench.sh emits
     // verbatim) gets a BOUNDED-SIZE record, not the full one: the driver's
     // capture window front-truncated the ~5 KB full line for three rounds
     // running (BENCH_r08–r10 "parsed": null) even though the full record
@@ -314,17 +314,12 @@ object Bench {
     // "parsed": null). Per-query numbers live in the committed
     // BENCH_LOCAL.json (and per-run in target/bench_full.json).
     val compact = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","writer":"$writer","n_queries":${results.size},"failed":$failed,"flaky":$flaky,"contract":$contractSlim,"load":$load,"full_record":"BENCH_LOCAL.json","sf":"$sfDir"}"""
-    // TWO fixed paths for the compact record: tools/bench.sh emits
-    // bench_last.json as its one stdout line; bench_compact.json is the
-    // driver-facing artifact (VERDICT r11 ask #5 — BENCH_r11 still had
-    // parsed:null because the stdout line rides sbt's [info] framing in a
-    // bare `sbt runMain` invocation; a fixed file needs no log parsing)
-    Seq("target/bench_last.json", "target/bench_compact.json").foreach { p =>
-      try {
-        java.nio.file.Files.write(java.nio.file.Paths.get(p),
-          (compact + "\n").getBytes("UTF-8"))
-      } catch { case _: Throwable => () }
-    }
+    // the compact record also lands in one fixed file: a bare `sbt runMain`
+    // frames stdout, a file needs no log parsing
+    try {
+      java.nio.file.Files.write(java.nio.file.Paths.get("target/bench_compact.json"),
+        (compact + "\n").getBytes("UTF-8"))
+    } catch { case _: Throwable => () }
     println(compact)
     spark.stop()
   }

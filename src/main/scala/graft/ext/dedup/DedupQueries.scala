@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.ext.text.TextNorm
 import graft.functions.{Exact, VectorFunctions}
 import graft.sources.Tables
+import graft.util.SnapshotCache
 
 /**
  * Deduplication suite for LLM training-data pipelines over `documents` and
@@ -129,7 +130,7 @@ object DedupQueries {
     * duplicates, so the distinct shuffle would buy nothing — the groupBy
     * below is the signature path's only exchange. */
   private[graft] def signatures(spark: SparkSession, dir: String): DataFrame =
-    snapshot("minhash_sigs", spark, dir)(signaturesLive(spark, dir))
+    SnapshotCache.snapshot("minhash_sigs", spark, dir)(signaturesLive(spark, dir))
 
   /** Exploded shingle rows over the FULL corpus — (doc_id, source, s),
     * NON-deduped — the shared upstream of the four shingle-consuming
@@ -151,7 +152,7 @@ object DedupQueries {
     * measured operator. At 100 TB this is the shingled-corpus parquet an
     * ingest pipeline maintains next to the raw text. */
   private[graft] def shingleRowsSnapshot(spark: SparkSession, dir: String): DataFrame =
-    snapshot("shingle_rows", spark, dir)(
+    SnapshotCache.snapshot("shingle_rows", spark, dir)(
       shingleRowsOf(Tables.rebalanced(spark, Tables.documents(spark, dir)),
         dedup = false, carry = Seq("source")))
 
@@ -219,7 +220,7 @@ object DedupQueries {
     * (The explode formulation generated 9.6 M intermediate rows per
     * evaluation and dominated dedup_simhash_pairs wall-clock.) */
   def qSimhash(spark: SparkSession, dir: String): DataFrame =
-    snapshot("simhash_sigs", spark, dir)(simhashLive(spark, dir))
+    SnapshotCache.snapshot("simhash_sigs", spark, dir)(simhashLive(spark, dir))
 
   /** The 48-bit signature build behind the `simhash_sigs` snapshot — the
     * persisted per-doc signature index (8 B/doc) that the chunk-join pair
@@ -292,39 +293,11 @@ object DedupQueries {
   def qNgramJaccard(spark: SparkSession, dir: String): DataFrame =
     jaccardFromPostings(spark, dir, dfCap = None)
 
-  /** Suite-scoped materialization of the uncapped jaccard pair set — the
-    * in-process analog of the pair-snapshot artifact a production
-    * deployment persists and shares across curation consumers (the shape
-    * [[graft.ext.pipeline.CurateRunner]] implies; SCALING.md "snapshot
-    * scale"). FIVE registered queries ride the same pair graph
-    * (dedup_ngram_jaccard, dedup_clusters, graph_pagerank,
-    * dedup_source_matrix, curate_clustered); without the snapshot each
-    * re-ran the scan→tokenize→shingle→posting-list pipeline — correct per
-    * query, ~5× the suite cost. First consumer builds + localCheckpoints;
-    * the rest reuse the materialized frame. Keyed by (session, dir,
-    * shuffle-partition setting) so a fresh session or a repartitioned
-    * re-run (DeterminismSpec's whole point) REBUILDS instead of reusing;
-    * entries for stopped sessions are evicted on access. At 100 TB the
-    * key is a snapshot path and the checkpoint is a parquet write — the
-    * consumers are unchanged.
-    *
-    * ASSUMPTION: data under `dir` is immutable for the session's lifetime
-    * (true for the driver's generated fixtures, and for production
-    * snapshot paths which are content-addressed). If a dir is regenerated
-    * in-session, call [[graft.util.SnapshotCache.clearAll]] first or the
-    * consumers read the stale materialization. */
-  private def snapshot(tag: String, spark: SparkSession, dir: String)
-                      (build: => DataFrame): DataFrame =
-    graft.util.SnapshotCache.snapshot(tag, spark, dir)(build)
-
-  private def releaseSnapshot(df: DataFrame): Unit =
-    graft.util.SnapshotCache.release(df)
-
-  // builds from the shared shingle materialization (r16) — same kernel,
-  // same values as qNgramJaccard (the live oracle form); only the shingle
-  // build is read instead of re-run
+  // five registered queries share this pair graph (dedup_ngram_jaccard,
+  // dedup_clusters, graph_pagerank, dedup_source_matrix, curate_clustered);
+  // same kernel and values as qNgramJaccard, read from the shared shingles
   private[graft] def jaccardPairSnapshot(spark: SparkSession, dir: String): DataFrame =
-    snapshot("jaccard", spark, dir)(
+    SnapshotCache.snapshot("jaccard", spark, dir)(
       jaccardPairsOfShingled(
         shingleRowsSnapshot(spark, dir)
           .select(col("doc_id"), Exact.md5Long(col("s")).as("h")),
@@ -333,12 +306,12 @@ object DedupQueries {
   /** All-pairs embedding near-dup snapshot — shared by dedup_embedding and
     * dedup_semantic (which collapses the same pair graph). */
   private[graft] def embeddingPairSnapshot(spark: SparkSession, dir: String): DataFrame =
-    snapshot("emb", spark, dir)(qEmbeddingDups(spark, dir))
+    SnapshotCache.snapshot("emb", spark, dir)(qEmbeddingDups(spark, dir))
 
   /** LSH-bucketed embedding near-dup snapshot — shared by
     * dedup_embedding_lsh and dedup_semantic_bucketed. */
   private[graft] def embeddingLshPairSnapshot(spark: SparkSession, dir: String): DataFrame =
-    snapshot("emb_lsh", spark, dir)(qEmbeddingDupsLsh(spark, dir))
+    SnapshotCache.snapshot("emb_lsh", spark, dir)(qEmbeddingDupsLsh(spark, dir))
 
   private def jaccardFromPostings(spark: SparkSession, dir: String,
                                   dfCap: Option[Int]): DataFrame =
@@ -420,7 +393,7 @@ object DedupQueries {
     * the batch probe is a bucket-pruned semi-join; the frame is one
     * 32-char hash per distinct content — far smaller than the corpus. */
   private[graft] def corpusHashIndex(spark: SparkSession, dir: String): DataFrame =
-    snapshot("inc-exact-hashes", spark, dir)(
+    SnapshotCache.snapshot("inc-exact-hashes", spark, dir)(
       Tables.documents(spark, dir).filter(col("source") =!= IncomingSource)
         .select(md5(TextNorm.norm(col("text"))).as("content_hash"))
         .distinct())
@@ -487,7 +460,7 @@ object DedupQueries {
     * hash may be shared by several docs, so removing one doc must not
     * remove the hash unless no survivor carries it ([[indexForget]]). */
   private[graft] def corpusDocHashes(spark: SparkSession, dir: String): DataFrame =
-    snapshot("inc-doc-hashes", spark, dir)(
+    SnapshotCache.snapshot("inc-doc-hashes", spark, dir)(
       Tables.documents(spark, dir).filter(col("source") =!= IncomingSource)
         .select(col("doc_id"), md5(TextNorm.norm(col("text"))).as("content_hash")))
 
@@ -602,7 +575,7 @@ object DedupQueries {
     * cost of BOTH span artifacts — is paid once per corpus version, not
     * once per artifact (VERDICT r15 #3, the dsir_weights discipline). */
   private[graft] def spanIslandsSnapshot(spark: SparkSession, dir: String): DataFrame =
-    snapshot("spans", spark, dir)(
+    SnapshotCache.snapshot("spans", spark, dir)(
       spanIslandsFromWindows(spanWindowsSnapshot(spark, dir).drop("source")))
 
   /** Positioned window hashes over the FULL corpus — (doc_id, source,
@@ -617,7 +590,7 @@ object DedupQueries {
     * the positioned-window parquet a deployment maintains next to the
     * corpus, re-sharded by content version like the other indexes. */
   private[graft] def spanWindowsSnapshot(spark: SparkSession, dir: String): DataFrame =
-    snapshot("span_windows", spark, dir)(
+    SnapshotCache.snapshot("span_windows", spark, dir)(
       windowRows(
         Tables.rebalanced(spark, Tables.documents(spark, dir))
           .select(col("doc_id"), col("source"), TextNorm.toks(col("text")).as("t")),
@@ -745,7 +718,7 @@ object DedupQueries {
     * snapshot cache like [[corpusIndex]] so repeated probes pay the probe
     * only. */
   private[graft] def spanCorpusIndex(spark: SparkSession, dir: String): DataFrame =
-    snapshot("span-posts", spark, dir)(
+    SnapshotCache.snapshot("span-posts", spark, dir)(
       spanWindowsSnapshot(spark, dir)
         .filter(col("source") =!= IncomingSource).drop("source")
         .groupBy(col("h"))
@@ -833,7 +806,7 @@ object DedupQueries {
     * to the pair snapshot. Built by `SnapshotBuild.all` (continuation of
     * the jaccard chain) so the cost stays one attributable entry. */
   private[graft] def clusterLabels(spark: SparkSession, dir: String): DataFrame =
-    snapshot("jaccard_clusters", spark, dir)(
+    SnapshotCache.snapshot("jaccard_clusters", spark, dir)(
       components(jaccardPairSnapshot(spark, dir), "doc_a", "doc_b"))
 
   /** Component labels of the all-pairs embedding near-dup graph as a
@@ -847,14 +820,14 @@ object DedupQueries {
     * `SnapshotBuild.all` as a continuation of the emb_pairs task. The
     * components loop itself is untouched — only its output is shared. */
   private[graft] def semClusterLabels(spark: SparkSession, dir: String): DataFrame =
-    snapshot("sem_clusters", spark, dir)(
+    SnapshotCache.snapshot("sem_clusters", spark, dir)(
       components(embeddingPairSnapshot(spark, dir), "vec_a", "vec_b"))
 
   /** [[semClusterLabels]] for the LSH-bucketed pair graph — the
     * dedup_semantic_bucketed consumer's label frame, a continuation of
     * the emb_lsh_pairs task. */
   private[graft] def semClusterLabelsLsh(spark: SparkSession, dir: String): DataFrame =
-    snapshot("sem_clusters_lsh", spark, dir)(
+    SnapshotCache.snapshot("sem_clusters_lsh", spark, dir)(
       components(embeddingLshPairSnapshot(spark, dir), "vec_a", "vec_b"))
 
   /** Survivor election: which document each near-dup cluster KEEPS —
@@ -969,17 +942,17 @@ object DedupQueries {
         .localCheckpoint(false)
       changed = next.filter(col("label") =!= col("old")).count()
       // `next` is materialized, so the superseded checkpoints' blocks can
-      // go — through releaseSnapshot: these frames are localCheckpoint-
+      // go — through SnapshotCache.release: these frames are localCheckpoint-
       // backed, so Dataset.unpersist would be a CacheManager no-op and
       // storage would grow by two label-set copies per round until the
       // ContextCleaner got around to them after GC
-      releaseSnapshot(stepped)
-      releaseSnapshot(labels)
+      SnapshotCache.release(stepped)
+      SnapshotCache.release(labels)
       labels = next.select(col("id"), col("label"))
     }
     // the returned frame reads only the final round's checkpoint — the
     // edge list's blocks are dead weight from here
-    releaseSnapshot(edges)
+    SnapshotCache.release(edges)
     labels.select(col("id"), col("label"))
   }
 
@@ -1052,7 +1025,7 @@ object DedupQueries {
       // distinct sets are equal iff counts match and one difference is empty
       changed = if (next.count() != edges.count()) 1L
                 else next.exceptAll(edges).count()
-      releaseSnapshot(edges)
+      SnapshotCache.release(edges)
       edges = next
     }
     // converged star forest: every leaf's only neighbor is its component
@@ -1067,8 +1040,8 @@ object DedupQueries {
     val out = nodes.join(labels, Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))
       .localCheckpoint()
-    releaseSnapshot(nodes)
-    releaseSnapshot(edges)
+    SnapshotCache.release(nodes)
+    SnapshotCache.release(edges)
     (out, rounds)
   }
 
@@ -1237,7 +1210,7 @@ object DedupQueries {
     * snapshot-cached like the jaccard/span indexes so repeated probes pay
     * the probe only. */
   private[graft] def embIncCorpusIndex(spark: SparkSession, dir: String): DataFrame =
-    snapshot("emb-inc-corpus", spark, dir)(
+    SnapshotCache.snapshot("emb-inc-corpus", spark, dir)(
       embIncArm(spark, dir, incoming = false).select(col("band"), col("bh"),
         col("vec_id").as("corpus_vec_id"), col("v").as("cv"), col("nsq").as("cn")))
 
@@ -1341,9 +1314,9 @@ object DedupQueries {
       shared
     }
     try {
-      val posts = snapshot("inc-posts", spark, dir)(
+      val posts = SnapshotCache.snapshot("inc-posts", spark, dir)(
         ex.groupBy(col("h")).agg(collect_set(col("doc_id")).as("docs")))
-      val oldSizes = snapshot("inc-sizes", spark, dir)(
+      val oldSizes = SnapshotCache.snapshot("inc-sizes", spark, dir)(
         ex.groupBy(col("doc_id")).agg(count(lit(1)).as("n_old"))
           .toDF("old_doc_id", "n_old"))
       (posts, oldSizes)
@@ -1351,7 +1324,7 @@ object DedupQueries {
       // both artifacts are themselves eager localCheckpoints, so the
       // shared intermediate (if a cold build forced it) frees immediately
       // — in a finally so a mid-build failure cannot orphan its blocks
-      if (shared ne null) releaseSnapshot(shared)
+      if (shared ne null) SnapshotCache.release(shared)
     }
   }
 

@@ -7,8 +7,12 @@ import org.apache.spark.sql.execution.SQLExecution
   *   runMain graft.tools.Explain <queryName> [sfDir]
   * or regenerate the checked-in plan dossier (PLANS.md):
   *   runMain graft.tools.Explain --audit <outFile> [sfDir]
-  * The session is [[graft.SparkSessions.recommended]]; PLANS.md's plans are
-  * taken with SPARK_MASTER and SPARK_GRAFT_CPUS unset (local[4], 4 shuffle
+  * or dump plans of named queries, one file each:
+  *   runMain graft.tools.Explain --dump|--dumpexec <outDir> <suffix> <sfDir> <name...>
+  * Other argument counts and unknown query names print the usage line and
+  * exit 2 before the session builds. The session is
+  * [[graft.SparkSessions.recommended]]; PLANS.md's plans are taken with
+  * SPARK_MASTER and SPARK_GRAFT_CPUS unset (local[4], 4 shuffle
   * partitions), as its header says. */
 object Explain {
 
@@ -384,23 +388,29 @@ object Explain {
             org.apache.spark.sql.functions.col("doc_b").as("b")),
         materialize = false)))
 
+  private val Usage = "usage: Explain [queryName [sfDir]] | --audit [outFile [sfDir]] | " +
+    "--dump|--dumpexec <outDir> <suffix> <sfDir> <name...>"
+
   def main(args: Array[String]): Unit = {
-    // arg validation BEFORE the session builds (ADVICE r16): a short arg
-    // list or a typo'd query name must print usage, not throw a raw
-    // IndexOutOfBounds/NoSuchElement after ~30 s of Spark startup
-    if (args.headOption.contains("--dump") || args.headOption.contains("--dumpexec")) {
-      require(args.length >= 5,
-        "usage: Explain --dump|--dumpexec <outDir> <suffix> <sfDir> <name...>")
-      val registry = graft.SparkEntry.queries ++ graft.SparkEntry.specOnly
-      val unknown = args.drop(4).filterNot(registry.contains)
-      require(unknown.isEmpty,
-        s"unknown queries: ${unknown.mkString(", ")} — names come from " +
-          "SparkEntry.queries/specOnly")
-    } else if (!args.headOption.contains("--audit")) {
-      val name = args.headOption.getOrElse("q1_pricing")
-      require(graft.SparkEntry.queries.contains(name),
-        s"unknown query: $name — names come from SparkEntry.queries")
+    // arguments are checked before the session builds: a wrong count or an
+    // unknown query name prints the usage line and exits 2, instead of
+    // being ignored or failing after ~30 s of Spark startup
+    def unknown(names: Seq[String], known: String => Boolean): Option[String] =
+      names.filterNot(known) match {
+        case Seq() => None
+        case bad => Some(s"unknown queries: ${bad.mkString(", ")}\n$Usage")
+      }
+    val problem = args.headOption match {
+      case Some("--dump" | "--dumpexec") =>
+        if (args.length < 5) Some(Usage)
+        else unknown(args.drop(4).toSeq,
+          (graft.SparkEntry.queries ++ graft.SparkEntry.specOnly).contains)
+      case Some("--audit") => if (args.length > 3) Some(Usage) else None
+      case _ =>
+        if (args.length > 2) Some(Usage)
+        else unknown(args.take(1).toSeq, graft.SparkEntry.queries.contains)
     }
+    problem.foreach { msg => System.err.println(msg); sys.exit(2) }
     val spark = graft.SparkSessions.recommended("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     if (args.headOption.contains("--audit")) {
@@ -435,8 +445,6 @@ object Explain {
       // (plans/r16/<query>_{before,after}.txt): ONE JVM writes
       // <outDir>/<name><suffix>.txt per named query — a per-query
       // `runMain` fork would pay ~40 s of sbt/Spark startup each.
-      //   runMain graft.tools.Explain --dump <outDir> <suffix> <sfDir> <name...>
-      // (args validated before the session built — top of main)
       val outDir = args(1); val suffix = args(2); val dir = args(3)
       val registry = graft.SparkEntry.queries ++ graft.SparkEntry.specOnly
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
@@ -461,7 +469,6 @@ object Explain {
         println(s"dumped $name")
       }
     } else {
-      // (name validated before the session built — top of main)
       val name = args.headOption.getOrElse("q1_pricing")
       val dir = args.lift(1).getOrElse("/root/testdata/sf0.01")
       graft.SparkEntry.queries(name)(spark, dir).explain("formatted")

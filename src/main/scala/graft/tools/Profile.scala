@@ -6,16 +6,13 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
-/** Dev timing tool over a scale-factor directory, in three modes:
+/** The ×10 scale-curve gate over a scale-factor directory:
   *   runMain graft.tools.Profile <sfDir> scalepin [record]
-  *   runMain graft.tools.Profile <sfDir> snapbuild [widths…]
-  *   runMain graft.tools.Profile <sfDir> q <names…>
-  * A missing or unknown mode prints the usage line and exits 2. The session
-  * is [[graft.SparkSessions.recommended]]. */
+  * Any other arguments print the usage line and exit 2. The session is
+  * [[graft.SparkSessions.recommended]]. */
 object Profile {
 
-  private val Usage =
-    "usage: Profile <sfDir> scalepin [record] | snapbuild [widths...] | q <names...>"
+  private val Usage = "usage: Profile <sfDir> scalepin [record]"
 
   /** The `scalepin` gate's pins, read and written relative to the
     * working directory (the repository root under sbt). */
@@ -117,20 +114,14 @@ object Profile {
     "q_mad_outliers" -> "ev", "q_mad_outliers_approx" -> "ev")
 
   def main(args: Array[String]): Unit = {
-    // arguments are checked before the session builds: a typo'd mode or
-    // query name fails in a second instead of running something else
+    // arguments are checked before the session builds: a typo'd mode
+    // fails in a second instead of running something else
     val rest = args.drop(2).toSeq
-    val problem = args.lift(1) match {
-      case Some("scalepin") if rest.isEmpty || rest == Seq("record") => None
-      case Some("snapbuild") if rest.forall(_.toIntOption.exists(_ > 0)) => None
-      case Some("q") if rest.nonEmpty =>
-        val unknown = rest.filterNot(graft.SparkEntry.queries.contains)
-        if (unknown.isEmpty) None
-        else Some(s"unknown queries: ${unknown.mkString(", ")}")
-      case _ => Some(Usage)
+    if (!args.lift(1).contains("scalepin") || rest.nonEmpty && rest != Seq("record")) {
+      System.err.println(Usage)
+      sys.exit(2)
     }
-    problem.foreach { msg => System.err.println(msg); sys.exit(2) }
-    if (args(1) == "scalepin" && rest.isEmpty && Files.exists(PinPath)) {
+    if (rest.isEmpty && Files.exists(PinPath)) {
       // a growth ratio measured on other cores is not comparable to a pin
       val here = Runtime.getRuntime.availableProcessors
       val pinned = """^\s*"cores":\s*(\d+),?\s*$""".r
@@ -142,46 +133,10 @@ object Profile {
         sys.exit(3)
       }
     }
-    val dir = args(0)
     val spark = graft.SparkSessions.recommended("graft-profile")
-    val ok = args(1) match {
-      case "scalepin" => scalePin(spark, dir, record = rest.nonEmpty)
-      case "snapbuild" => snapBuild(spark, dir, rest.map(_.toInt)); true
-      case "q" => timeQueries(spark, dir, rest); true
-    }
+    val ok = scalePin(spark, args(0), record = rest.nonEmpty)
     spark.stop()
     if (!ok) sys.exit(2)
-  }
-
-  /** Steady-state timing of named registered queries: one untimed warm
-    * run, then 5 timed runs; prints min/median so a GC or compilation
-    * hiccup in one sample can't masquerade as a plan cost. */
-  private def timeQueries(spark: SparkSession, dir: String, names: Seq[String]): Unit =
-    names.foreach { name =>
-      val fn = graft.SparkEntry.queries(name)
-      fn(spark, dir).count()
-      val samples = (1 to 5).map { _ =>
-        val t0 = System.nanoTime(); fn(spark, dir).count()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      println(f"$name%-30s min=${samples.head}%6.2f s  med=${samples(2)}%6.2f s")
-    }
-
-  /** Pool-width probe for the concurrent snapshot_build section: wall time
-    * of SnapshotBuild.all at each width (default 4, 8, 12, 16), one
-    * discarded warm round first so codegen/classload doesn't bill the
-    * first width measured. Width 1 is the isolated per-artifact
-    * measurement: each artifact's seconds without scheduler contention. */
-  private def snapBuild(spark: SparkSession, dir: String, widths: Seq[Int]): Unit = {
-    graft.util.SnapshotCache.clearAll()
-    graft.util.SnapshotBuild.all(spark, dir) // warm (discarded)
-    for (p <- if (widths.nonEmpty) widths else Seq(4, 8, 12, 16)) {
-      graft.util.SnapshotCache.clearAll()
-      val t0 = System.nanoTime()
-      val d = graft.util.SnapshotBuild.all(spark, dir, p)
-      println(f"snapbuild parallelism=$p%-3d wall=${(System.nanoTime() - t0) / 1e9}%6.2f s" +
-        s"  top5=${d.sortBy(-_._2).take(5).map { case (n, s) => f"$n=$s%.2f" }.mkString(",")}")
-    }
   }
 
   /** Mechanized 10x-curve regression gate (VERDICT r14 #5): SCALING.md's

@@ -12,8 +12,7 @@ import scala.concurrent.duration.Duration
  * interleaves their jobs. Concurrency changes only wall time: artifacts,
  * cache keys and attribution names are those of a sequential walk of
  * [[Graph]] (SnapshotBuildSpec). Per-artifact seconds are each step's own
- * elapsed time, scheduler contention included; `graft.tools.Profile <dir>
- * snapbuild 1` (a pool of width 1) gives the isolated figure.
+ * elapsed time, scheduler contention included.
  *
  * [[SnapshotCache]] is safe under this concurrency: builds run outside the
  * map's bin locks and a losing racer's blocks are released.
@@ -81,25 +80,23 @@ object SnapshotBuild {
   }
 
   /** Pool width cap: enough steps in flight to fill scheduler gaps, few
-    * enough that each job keeps multi-core stages. The `snapbuild` probe
-    * at sf0.1 on 32 cores read 8 → 11.5 s, 12 → 9.3 s, 16 → 8.9 s and
-    * 24 → 15.5 s (oversubscription thrash). */
+    * enough that each job keeps multi-core stages. At sf0.1 on 32 cores,
+    * widths 8, 12, 16 and 24 built in 11.5, 9.3, 8.9 and 15.5 s
+    * (oversubscription thrash at 24); on 4 cores width 4 beat width 2 in
+    * 10 of 10 runs (about 28 against 36 s). */
   val Parallelism = 16
 
   /** Build (or re-touch) every artifact of [[Graph]] and return
     * `(name, seconds)` per step, in [[Graph]] order, depth first. Throws
-    * if any build throws. `parallelism` > 0 fixes the pool width (the
-    * `snapbuild` probe); 0 scales it with the session's cores, half of
-    * them capped at [[Parallelism]], since 16 concurrent jobs on a
-    * local[4] driver thrash the way width 24 does on 32 cores. A step's
-    * lone `next` step runs on the step's own thread; a fan-out of several
-    * is submitted to the pool, behind the roots, so every root starts
-    * before any branch and the heavy roots are not pushed back. */
-  def all(spark: SparkSession, dir: String,
-          parallelism: Int = 0): Seq[(String, Double)] = {
-    val width =
-      if (parallelism > 0) parallelism
-      else math.max(2, math.min(Parallelism, spark.sparkContext.defaultParallelism / 2))
+    * if any build throws. The pool is one thread per session core, capped
+    * at [[Parallelism]]; only 4 and 32 cores are measured, hosts with 8–31
+    * cores are not. Each step runs in its own FAIR pool. A step's lone
+    * `next` step runs on the step's own thread, after its parent; a
+    * fan-out of several is submitted to the pool, behind the roots, so
+    * every root starts before any branch and the heavy roots are not
+    * pushed back. */
+  def all(spark: SparkSession, dir: String): Seq[(String, Double)] = {
+    val width = math.min(Parallelism, spark.sparkContext.defaultParallelism)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(width)
     val submit = ExecutionContext.fromExecutor(pool)
     implicit val join: ExecutionContext = ExecutionContext.parasitic

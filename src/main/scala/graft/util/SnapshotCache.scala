@@ -6,16 +6,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * Suite-scoped materialization cache for shared intermediate frames — the
  * in-process analog of the snapshot artifact a production deployment
  * persists once per corpus version and shares across consumers (SCALING.md
- * "snapshot scale"). Factored out of the dedup pair snapshots (round 11)
- * so other families — first the distinct-basket frame shared by
- * q_basket_pairs / q_basket_rules — can ride the same discipline instead
- * of each inventing a cache.
+ * "snapshot scale"). Every family that shares a frame (the dedup pair
+ * snapshots, the distinct-basket frame of q_basket_pairs / q_basket_rules,
+ * …) goes through this one cache instead of inventing its own.
  *
  * Keyed by (session, dir, shuffle-partition setting, tag) so a fresh
  * session or a repartitioned re-run REBUILDS instead of reusing; entries
- * for stopped sessions are evicted on access. At 100 TB the key is a
- * snapshot path and the checkpoint is a parquet write — consumers are
- * unchanged.
+ * for stopped sessions are evicted on access. The materialization is a
+ * `localCheckpoint`: executor-local blocks, which a lost executor takes
+ * with it (so do the queries' own in-query localCheckpoints). At 100 TB
+ * the key is a snapshot path and the checkpoint is a parquet write —
+ * consumers are unchanged.
  *
  * ASSUMPTION: data under `dir` is immutable for the session's lifetime
  * (true for the driver's generated fixtures and for content-addressed
@@ -24,34 +25,34 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  */
 object SnapshotCache {
 
-  private val snapshots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String, String), DataFrame]()
+  private type Key = (SparkSession, String, String, String)
+
+  private def key(spark: SparkSession, dir: String, tag: String): Key =
+    (spark, dir, spark.conf.get("spark.sql.shuffle.partitions"), tag)
+
+  private val snapshots = new java.util.concurrent.ConcurrentHashMap[Key, DataFrame]()
 
   /** UN-materialized builder frames, captured at build time keyed like the
-    * snapshots. This is the plan-sweep surface (VERDICT r13 #2): round 13
-    * moved every declared all-pairs cartesian into snapshot builders, whose
-    * plans no registered-query sweep could see — the discipline specs
-    * (CrossJoinDisciplineSpec / WindowDisciplineSpec / PlanDigestSpec) read
-    * these frames to police builder plans exactly like query plans.
-    * Entries survive [[clearAll]] (the plan is metadata, not blocks) and
-    * are overwritten on rebuild. */
-  private val builtPlans =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String, String), DataFrame]()
+    * snapshots. The discipline specs (CrossJoinDisciplineSpec /
+    * WindowDisciplineSpec / PlanDigestSpec) read these frames to police
+    * builder plans exactly like query plans: no registered-query sweep
+    * sees a plan that only a snapshot builder runs. Entries survive
+    * [[clearAll]] (the plan is metadata, not blocks) and are overwritten
+    * on rebuild. */
+  private val builtPlans = new java.util.concurrent.ConcurrentHashMap[Key, DataFrame]()
 
   /** Every captured builder frame for (spark, dir) under the session's
-    * CURRENT conf key (so a DeterminismSpec-style shuffle-partition rerun
-    * cannot leak its variants into the sweep): tag → the frame as the
-    * builder composed it, BEFORE checkpointing — its logical plan is the
+    * CURRENT shuffle partitions (so a DeterminismSpec-style rerun cannot
+    * leak its variants into the sweep): tag → the frame as the builder
+    * composed it, BEFORE checkpointing — its logical plan is the
     * artifact's build pipeline (dependency snapshots appear as their
     * materialized LogicalRDD leaves). Callers re-plan via `select("*")`
     * when they need planning under a different conf (the executed plan of
     * the returned frame is fixed under build-time conf). */
   def builderPlans(spark: SparkSession, dir: String): Map[String, DataFrame] = {
-    val tier = spark.conf.getOption(ReliableConf).exists(_.toBoolean).toString
-    val confKey = spark.conf.get("spark.sql.shuffle.partitions") + "|" + tier
     val out = Map.newBuilder[String, DataFrame]
     builtPlans.forEach { (k, df) =>
-      if ((k._1 eq spark) && k._2 == dir && k._3 == confKey) out += (k._4 -> df)
+      if (key(spark, dir, k._4) == k) out += (k._4 -> df)
     }
     out.result()
   }
@@ -79,51 +80,25 @@ object SnapshotCache {
     }
   }
 
-  /** Session conf choosing the materialization tier:
-    * `false` (default) → `localCheckpoint` — executor-local blocks, the
-    * right call on local[n] and for artifacts cheap to rebuild;
-    * `true` → reliable `checkpoint` — survives executor loss, the
-    * SCALING.md deploy swap for a real cluster where a lost executor
-    * would otherwise fail every consumer of the artifact (localCheckpoint
-    * lineage is truncated and CANNOT recompute). One flag, consumers
-    * unchanged; SnapshotCacheSpec pins result equality across tiers. */
-  val ReliableConf = "spark.graft.snapshot.reliable"
-  /** Optional reliable-checkpoint directory (HDFS/S3 path on a cluster);
-    * defaults to a session-scoped temp dir when unset. */
-  val CheckpointDirConf = "spark.graft.snapshot.checkpointDir"
-
-  private def materialize(spark: SparkSession, df: DataFrame): DataFrame =
-    if (spark.conf.getOption(ReliableConf).exists(_.toBoolean)) {
-      if (spark.sparkContext.getCheckpointDir.isEmpty)
-        spark.sparkContext.setCheckpointDir(
-          spark.conf.getOption(CheckpointDirConf).getOrElse(
-            java.nio.file.Files.createTempDirectory("graft_chk").toString))
-      df.checkpoint()
-    } else df.localCheckpoint()
-
   /** Return the cached materialization of `build` for (spark, dir, tag),
-    * building + checkpointing on first use ([[ReliableConf]] picks the
-    * tier; the tier is part of the cache key so an in-session toggle
-    * rebuilds instead of silently reusing the other tier's blocks). */
+    * building + localCheckpointing on first use. */
   def snapshot(tag: String, spark: SparkSession, dir: String)
               (build: => DataFrame): DataFrame = {
     // evict entries for stopped sessions (their blocks died with the
     // executors — nothing left to unpersist)
     snapshots.keySet.removeIf(k => k._1.sparkContext.isStopped)
     builtPlans.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val tier = spark.conf.getOption(ReliableConf).exists(_.toBoolean).toString
-    val key = (spark, dir,
-      spark.conf.get("spark.sql.shuffle.partitions") + "|" + tier, tag)
-    val cached = snapshots.get(key)
+    val k = key(spark, dir, tag)
+    val cached = snapshots.get(k)
     if (cached ne null) cached
     else {
       // build OUTSIDE the map's bin lock: computeIfAbsent would hold it
       // for the length of a full Spark job, blocking unrelated builds
       // that hash to the same bin; on a race the loser's blocks are freed
       val frame = build
-      builtPlans.put(key, frame)
-      val built = materialize(spark, frame)
-      val winner = snapshots.putIfAbsent(key, built)
+      builtPlans.put(k, frame)
+      val built = frame.localCheckpoint()
+      val winner = snapshots.putIfAbsent(k, built)
       if (winner ne null) { release(built); winner } else built
     }
   }

@@ -340,7 +340,7 @@ class ExtensionsSpec extends SparkSpec {
   test("components loops free superseded checkpoints (no per-round storage growth)") {
     // Each propagation round checkpoints two label frames; each star round
     // checkpoints one edge set. Without routing the frees through
-    // releaseSnapshot (Dataset.unpersist is a CacheManager no-op for
+    // SnapshotCache.release (Dataset.unpersist is a CacheManager no-op for
     // localCheckpoint blocks) a deep chain leaks ~2 blocks per round and
     // only the ContextCleaner ever reclaims them. Only the RETURNED
     // frame's checkpoint may remain after each call.

@@ -8,6 +8,8 @@
 #
 # Usage:  tools/preflight.sh          # compile gate only (~30 s warm)
 #         tools/preflight.sh --test   # compile gate + full ScalaTest suite
+#                                     #   + the perfbench harness build and
+#                                     #   its Python unit tests
 #         tools/preflight.sh --full   # + Verify/oracle @ sf0.01 + one Bench
 #                                     #   pass @ sf0.01 (the driver's t2/t3
 #                                     #   surfaces, ~5 min total)
@@ -20,6 +22,11 @@ sbt -batch Test/compile
 if [[ "${1:-}" == "--test" || "${1:-}" == "--full" ]]; then
   echo "[preflight] sbt test ..."
   sbt -batch test
+  # the benchmark harness compiles against engine signatures; a break there
+  # would otherwise surface only when the benchmark runs
+  echo "[preflight] perfbench harness compile + unit tests ..."
+  (cd perfbench && sbt --batch compile)
+  python3 -m unittest discover -s perfbench -p 'test_*.py'
 fi
 
 if [[ "${1:-}" == "--full" ]]; then
